@@ -10,7 +10,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -147,7 +147,7 @@ def clustering_scores(
 ) -> dict[str, float]:
     """Supervised clustering scores computed IN SPARK from the
     (cluster, label) contingency counts — replaces the reference's
-    ``toPandas`` + sklearn path (autolinker.py:1234-1257) with three
+    ``toPandas`` + sklearn path (autolinker.py:1234-1257) with a few
     aggregations; no driver-side row data.
 
     Returns homogeneity, completeness, V-measure (entropy-based; public
@@ -168,31 +168,28 @@ def clustering_scores(
             "homogeneity", "completeness", "v_measure", "adjusted_rand"
         )}
 
-    def entropy_of(keys: list[str]) -> float:
-        sizes = cont.groupBy(*keys).agg(F.sum("n").alias("m"))
-        row = sizes.agg(
-            F.sum(-(F.col("m") / n_total) * F.log(F.col("m") / n_total))
-        ).collect()[0]
-        return float(row[0] or 0.0)
+    # ONE aggregation over the contingency cells, each carrying its row
+    # (nk) and column (nc) totals: every entropy is a per-cell sum
+    #   H(C)   = -Σ (n/N) ln(nc/N)     H(C|K) = -Σ (n/N) ln(n/nk)
+    #   H(K)   = -Σ (n/N) ln(nk/N)     H(K|C) = -Σ (n/N) ln(n/nc)
+    # so terms that are equal (one cluster: nk = N and n = nc) are
+    # summed in the same order and the ratios come out exact.
+    cells = cont.withColumn(
+        "nk", F.sum("n").over(Window.partitionBy("k"))
+    ).withColumn("nc", F.sum("n").over(Window.partitionBy("c")))
+    p = F.col("n") / n_total
 
-    h_c = entropy_of(["c"])
-    h_k = entropy_of(["k"])
-    # H(C|K) = -Σ_{k,c} (n/N) ln(n / n_k)
-    nk = cont.groupBy("k").agg(F.sum("n").alias("nk"))
-    joint = cont.join(nk, "k")
-    h_c_given_k = float(
-        joint.agg(
-            F.sum(-(F.col("n") / n_total) * F.log(F.col("n") / F.col("nk")))
-        ).collect()[0][0]
-        or 0.0
-    )
-    nc = cont.groupBy("c").agg(F.sum("n").alias("nc"))
-    joint_c = cont.join(nc, "c")
-    h_k_given_c = float(
-        joint_c.agg(
-            F.sum(-(F.col("n") / n_total) * F.log(F.col("n") / F.col("nc")))
-        ).collect()[0][0]
-        or 0.0
+    def ent(num, den):
+        return F.sum(-p * F.log(num / den))
+
+    h_c, h_k, h_c_given_k, h_k_given_c = (
+        float(v or 0.0)
+        for v in cells.agg(
+            ent(F.col("nc"), F.lit(n_total)),
+            ent(F.col("nk"), F.lit(n_total)),
+            ent(F.col("n"), F.col("nk")),
+            ent(F.col("n"), F.col("nc")),
+        ).first()
     )
     homogeneity = 1.0 if h_c == 0 else 1.0 - h_c_given_k / h_c
     completeness = 1.0 if h_k == 0 else 1.0 - h_k_given_c / h_k
@@ -206,6 +203,8 @@ def clustering_scores(
     def comb2(col):
         return col * (col - 1) / 2
 
+    nk = cont.groupBy("k").agg(F.sum("n").alias("nk"))
+    nc = cont.groupBy("c").agg(F.sum("n").alias("nc"))
     sum_ij = cont.agg(F.sum(comb2(F.col("n")))).collect()[0][0] or 0.0
     sum_k = nk.agg(F.sum(comb2(F.col("nk")))).collect()[0][0] or 0.0
     sum_c = nc.agg(F.sum(comb2(F.col("nc")))).collect()[0][0] or 0.0

@@ -18,10 +18,11 @@ Index layout under ``path/``:
   probes aggregate ``SUM(df)`` over the pruned buckets, so growing the
   index never rewrites the stored stats (``compact_lex_index`` merges
   delta rows back to one row per term when fragmentation warrants).
-- ``index.json`` — ``{n_docs, sum_dl, n_buckets, ...}``. ``n_docs`` /
-  ``sum_dl`` update incrementally from one aggregate over each delta
-  (never a full-index rescan), and ``avgdl = sum_dl / n_docs`` is exact
-  at any append count — a float running-average would drift.
+- the manifest's ``meta`` — ``{n_docs, sum_dl, n_buckets, ...}``.
+  ``n_docs`` / ``sum_dl`` update incrementally from one aggregate over
+  each delta (never a full-index rescan), and ``avgdl = sum_dl /
+  n_docs`` is exact at any append count — a float running-average
+  would drift.
 
 Serving (:func:`lex_index_topk`) reuses the exact scoring tail of
 :func:`retrieval.bm25_topk` (same idf/tf saturation, same 6-decimal
@@ -32,23 +33,16 @@ No reference analogue (the reference has no retrieval surface) —
 LLM-brief scope, Spark-first: every artifact is a parquet table or a
 JSON literal; no sidecar services, no custom file formats.
 
-Two storage layouts, chosen at build time and auto-detected after:
-
-- ``layout="manifest"`` (default): immutable ``gen=N`` data
-  directories + a linear log of JSON manifests committed by
-  conditional create (:mod:`.manifestfs`) — zero renames, so
-  maintenance works on object stores (S3/GCS); every mutation
-  (append, DELETE — all three artifacts in one commit, multi-bucket
-  compaction, whole-store rebuild) is one atomic manifest commit, and
-  loaded indexes PIN the snapshot they opened (concurrent maintenance
-  never changes what a reader sees; reclamation is an explicit
-  :func:`vacuum_lex_index`). Default since the sf0.1 A/B showed ~parity
-  cost (SCALE.md: +31 ms load, probe parity) and it is the only layout
-  with exactly-once sinks, time travel, and concurrent writers.
-- ``layout="rename"`` (opt-in): live ``bucket=N`` dirs mutated in
-  place by the two-rename swap, repaired on load (:mod:`.storefs`) —
-  the single-writer POSIX fast path; no manifest log to maintain.
-  Existing rename stores keep working unchanged (auto-detected).
+Storage: immutable ``gen=N`` data directories + a linear log of JSON
+manifests committed by conditional create (:mod:`.manifestfs`) — zero
+renames, so maintenance works on object stores (S3/GCS); every
+mutation (append, DELETE — all three artifacts in one commit,
+multi-bucket compaction, whole-store rebuild) is one atomic manifest
+commit, and loaded indexes PIN the snapshot they opened (concurrent
+maintenance never changes what a reader sees; reclamation is an
+explicit :func:`vacuum_lex_index`). Stores written by the retired
+in-place layout (an ``index.json`` at the root) are rejected on open
+with a rebuild hint.
 
 Scale design: the postings shuffle at build time is the inverted index
 itself (map-side combined distinct (doc, term) pairs — any index build
@@ -62,9 +56,7 @@ standard stop-list cut.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -73,11 +65,6 @@ from pyspark.sql import functions as F
 from auto_data_linkage_spark.operators import manifestfs as M
 from auto_data_linkage_spark.operators import text as X
 from auto_data_linkage_spark.operators.retrieval import doc_postings
-from auto_data_linkage_spark.operators.storefs import (
-    remove_dir,
-    repair_swept_dirs,
-    swap_dir,
-)
 
 _VERSION = 1
 
@@ -87,7 +74,6 @@ __all__ = [
     "compact_lex_index",
     "delete_from_lex_index",
     "rebuild_lex_index",
-    "repair_lex_index",
     "vacuum_lex_index",
     "lex_index_sink",
     "load_lex_index",
@@ -96,20 +82,15 @@ __all__ = [
 ]
 
 
-def _local(path: str) -> str:
-    return path[7:] if path.startswith("file://") else path
-
-
-def _write_meta(local: str, meta: dict) -> None:
-    """Atomic index.json update (temp file + os.replace, the
-    annindex/PosixCommitStore pattern): readers always see a complete
-    old or new JSON, never a torn file."""
-    meta["generation"] = int(meta.get("generation", 0)) + 1
-    target = os.path.join(local, "index.json")
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, target)
+def _snapshot(path: str, version: int | None = None) -> dict:
+    """The store's manifest (``version`` pins a historical one), with
+    the retired-layout check first and the format-version guard."""
+    M.reject_legacy_store(path, "build_lex_index")
+    snap = M.read_manifest(path, version)
+    v = snap["meta"].get("version")
+    if v != _VERSION:
+        raise ValueError(f"unsupported lex-index version {v!r}")
+    return snap
 
 
 @dataclass
@@ -171,7 +152,6 @@ def _mask_tombstoned(
 
 def _build_artifacts(
     corpus: DataFrame,
-    local: str,
     *,
     id_col: str,
     text_col: str,
@@ -181,8 +161,7 @@ def _build_artifacts(
 ) -> dict:
     """Shared build body: write the postings + terms tables into the
     given directories and return the metadata dict (not yet
-    persisted). Used by both layouts (rename writes into the live
-    dirs; manifest writes into fresh ``gen=N`` dirs). Postings rows
+    persisted), written into fresh ``gen=N`` dirs. Postings rows
     are stamped with ``__seq`` = 1 (the store's mutation counter —
     appends stamp meta.seq+1, tombstones record the counter they were
     cut at; see :func:`_mask_tombstoned`)."""
@@ -224,25 +203,25 @@ def _build_artifacts(
     }
 
 
-def _manifest_build_commit(
+def build_lex_index(
     corpus: DataFrame,
     path: str,
     *,
-    id_col: str,
-    text_col: str,
-    n_buckets: int,
-    expected_version: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_buckets: int = 64,
+    _expected_version: int = 0,
 ) -> dict:
-    """Write a complete fresh build into new generations and return
-    the committed manifest — v1 for a new store (``expected_version
-    = 0``), vN+1 replacing every table for a rebuild (old generations
-    stay on disk for pinned readers until vacuum)."""
-    local = _local(path)
+    """One corpus pass → stored inverted index, written into fresh
+    generations and committed as manifest v1 (``_expected_version`` is
+    the head a rebuild replaces — see :func:`rebuild_lex_index`).
+    Returns the metadata dict."""
+    local = M.local_path(path)
+    os.makedirs(local, exist_ok=True)
     gp = M.next_gen(path, "postings")
     gt = M.next_gen(path, "terms")
     meta = _build_artifacts(
         corpus,
-        local,
         id_col=id_col,
         text_col=text_col,
         n_buckets=n_buckets,
@@ -251,47 +230,9 @@ def _manifest_build_commit(
     )
     tables = M.add_gens({}, "postings", M.written_parts(path, "postings", gp), gp)
     tables = M.add_gens(tables, "terms", M.written_parts(path, "terms", gt), gt)
-    return M.commit_manifest(
-        path, tables=tables, meta=meta, expected_version=expected_version
+    M.commit_manifest(
+        path, tables=tables, meta=meta, expected_version=_expected_version
     )
-
-
-def build_lex_index(
-    corpus: DataFrame,
-    path: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 64,
-    layout: str = "manifest",
-) -> dict:
-    """One corpus pass → stored inverted index. Returns the metadata
-    dict (embedded in manifest v1 by default, or written atomically to
-    ``index.json`` with ``layout="rename"`` — see the module docstring
-    for the layout trade)."""
-    if layout not in ("rename", "manifest"):
-        raise ValueError(f"layout must be 'rename' or 'manifest', got {layout!r}")
-    local = _local(path)
-    os.makedirs(local, exist_ok=True)
-    if layout == "manifest":
-        return _manifest_build_commit(
-            corpus,
-            path,
-            id_col=id_col,
-            text_col=text_col,
-            n_buckets=n_buckets,
-            expected_version=0,
-        )["meta"]
-    meta = _build_artifacts(
-        corpus,
-        local,
-        id_col=id_col,
-        text_col=text_col,
-        n_buckets=n_buckets,
-        postings_dir=os.path.join(local, "postings"),
-        terms_dir=os.path.join(local, "terms"),
-    )
-    _write_meta(local, meta)
     return meta
 
 
@@ -313,35 +254,20 @@ def append_lex_index(
     aggregate over the delta. Ids are NOT dedup-checked against stored
     rows (dedup upstream — the same contract as ``append_ann_index``).
 
-    Rename layout: runs the torn-compaction sweep first (appending
-    into a store whose bucket is parked as ``__old`` would recreate
-    the live dir, and the NEXT sweep would then mistake the parked
-    original for a completed-swap leftover and drop it). Manifest
-    layout: the delta lands in fresh ``gen=N`` dirs and becomes
-    visible only at the single manifest commit — a crash before the
-    commit leaves nothing visible, so a checkpointed streaming replay
-    of the failed batch appends exactly once (the rename layout's
-    duplicate-on-replay caveat disappears).
+    The delta lands in fresh ``gen=N`` dirs and becomes visible only
+    at the single manifest commit — a crash before the commit leaves
+    nothing visible, so a checkpointed streaming replay of the failed
+    batch appends exactly once.
 
     ``txn=(app_id, batch_id)`` makes replays idempotent from the OTHER
     side too (crash AFTER the commit but before the streaming
-    checkpoint advanced): the token is recorded with the append —
-    atomically, in the same manifest commit, on the manifest layout —
-    and an append re-presenting an already-recorded batch id is
-    skipped (see :func:`manifestfs.txn_version`)."""
-    local = _local(path)
-    manifest = M.is_manifest_store(path)
-    if manifest:
-        snap = M.read_manifest(path)
-        meta = dict(snap["meta"])
-    else:
-        repair_lex_index(path)
-        with open(os.path.join(local, "index.json")) as f:
-            meta = json.load(f)
-    if meta.get("version") != _VERSION:
-        raise ValueError(
-            f"unsupported lex-index version {meta.get('version')!r}"
-        )
+    checkpoint advanced): the token is recorded atomically in the same
+    manifest commit as the append, and an append re-presenting an
+    already-recorded batch id is skipped (see
+    :func:`manifestfs.txn_version`)."""
+    local = M.local_path(path)
+    snap = _snapshot(path)
+    meta = dict(snap["meta"])
     if txn is not None and M.txn_version(meta, txn[0]) >= int(txn[1]):
         return meta  # this batch already committed: a checkpoint replay
     n_docs, sum_dl = delta.select(
@@ -364,129 +290,80 @@ def append_lex_index(
             "__seq", F.lit(int(meta["seq"]) + 1)
         )
     posts = posts.localCheckpoint(eager=False)
-    if manifest:
-        gp = M.next_gen(path, "postings")
-        gt = M.next_gen(path, "terms")
-        posts_dir = os.path.join(local, "postings", gp)
-        terms_dir = os.path.join(local, "terms", gt)
-    else:
-        posts_dir = os.path.join(local, "postings")
-        terms_dir = os.path.join(local, "terms")
-    posts.write.mode("append").partitionBy("bucket").parquet(posts_dir)
+    gp = M.next_gen(path, "postings")
+    gt = M.next_gen(path, "terms")
+    posts.write.partitionBy("bucket").parquet(
+        os.path.join(local, "postings", gp)
+    )
     (
         posts.groupBy("bucket", "term")
         .agg(F.count("*").alias("df"))
-        .write.mode("append")
-        .partitionBy("bucket")
-        .parquet(terms_dir)
+        .write.partitionBy("bucket")
+        .parquet(os.path.join(local, "terms", gt))
     )
-    if manifest:
-        # merge-retry commit (manifestfs.commit_with_retry): the delta
-        # generations are already written and immutable, so losing the
-        # version race to a concurrent commit (another append, a
-        # delete, a compaction) only re-runs this cheap manifest merge
-        # — adding our gens to the FRESH snapshot composes with any
-        # interleaved delta/compaction. A concurrent REBUILD is the
-        # one non-mergeable case (it may change tokenization-relevant
-        # parameters and resets the corpus) — guarded, loud.
-        pp = M.written_parts(path, "postings", gp)
-        tp = M.written_parts(path, "terms", gt)
-        orig = snap["meta"]
+    # merge-retry commit (manifestfs.commit_with_retry): the delta
+    # generations are already written and immutable, so losing the
+    # version race to a concurrent commit (another append, a delete, a
+    # compaction) only re-runs this cheap manifest merge — adding our
+    # gens to the FRESH snapshot composes with any interleaved
+    # delta/compaction. A concurrent REBUILD is the one non-mergeable
+    # case (it may change tokenization-relevant parameters and resets
+    # the corpus) — guarded, loud.
+    pp = M.written_parts(path, "postings", gp)
+    tp = M.written_parts(path, "terms", gt)
+    orig = snap["meta"]
 
-        def mutate(fresh: dict):
-            fm = fresh["meta"]
-            if txn is not None and M.txn_version(fm, txn[0]) >= int(txn[1]):
-                # a concurrent writer presenting the SAME token won the
-                # race since the entry check (duplicate sink instance /
-                # overlapping sync): merging would double-append the
-                # batch — abort atomically with the commit; our gens
-                # stay invisible (vacuumable orphans)
-                raise M.AlreadyApplied(fresh)
-            for k in ("version", "n_buckets", "id_col", "text_col"):
-                if fm.get(k) != orig.get(k):
-                    raise M.ManifestConflictError(
-                        f"lex-index parameter {k!r} changed under this "
-                        "append (concurrent rebuild?) — re-run the "
-                        "append against the new index"
-                    )
-            if seq_aware and int(fm.get("seq", 0)) != int(orig.get("seq", 0)):
-                # our rows were stamped against the OLD counter; if a
-                # concurrent delete cut at or past that stamp, merging
-                # now would mask the rows the moment they arrive —
-                # check the FRESH cuts and restamp if so (appends
-                # alone never trip this: they move seq but not cuts)
-                tombs = M.read_table(
-                    delta.sparkSession, path, "tombstones", fresh
-                )
-                if tombs is not None and "as_of_seq" in tombs.columns:
-                    mx = tombs.agg(F.max("as_of_seq")).first()[0]
-                    if mx is not None and int(mx) >= int(
-                        orig.get("seq", 0)
-                    ) + 1:
-                        raise _RestampRequired()
-            m2 = dict(fm)
-            m2["n_docs"] = int(fm["n_docs"]) + int(n_docs)
-            m2["sum_dl"] = int(fm["sum_dl"]) + int(sum_dl or 0)
-            if seq_aware:
-                m2["seq"] = int(fm.get("seq", 0)) + 1
-            m2 = M.with_txn(m2, txn)
-            t2 = M.add_gens(fresh["tables"], "postings", pp, gp)
-            t2 = M.add_gens(t2, "terms", tp, gt)
-            return t2, m2
-
-        try:
-            return M.commit_with_retry(path, mutate)["meta"]
-        except M.AlreadyApplied as e:
-            return dict(e.snapshot["meta"])
-        except _RestampRequired:
-            if _attempts <= 1:
+    def mutate(fresh: dict):
+        fm = fresh["meta"]
+        if txn is not None and M.txn_version(fm, txn[0]) >= int(txn[1]):
+            # a concurrent writer presenting the SAME token won the
+            # race since the entry check (duplicate sink instance /
+            # overlapping sync): merging would double-append the batch
+            # — abort atomically with the commit; our gens stay
+            # invisible (vacuumable orphans)
+            raise M.AlreadyApplied(fresh)
+        for k in ("version", "n_buckets", "id_col", "text_col"):
+            if fm.get(k) != orig.get(k):
                 raise M.ManifestConflictError(
-                    "this append keeps racing concurrent deletes whose "
-                    "tombstone cuts cover its row stamps — serialize "
-                    "the writers"
-                ) from None
-            # full re-run: re-read meta, re-encode, restamp past the
-            # new cuts (the losing attempt's generations are vacuumable
-            # orphans)
-            return append_lex_index(
-                delta, path, txn=txn, _attempts=_attempts - 1
-            )
-    meta["n_docs"] = int(meta["n_docs"]) + int(n_docs)
-    meta["sum_dl"] = int(meta["sum_dl"]) + int(sum_dl or 0)
-    if seq_aware:
-        meta["seq"] = int(meta["seq"]) + 1
-    meta = M.with_txn(meta, txn)
-    _write_meta(local, meta)
-    return meta
+                    f"lex-index parameter {k!r} changed under this "
+                    "append (concurrent rebuild?) — re-run the append "
+                    "against the new index"
+                )
+        if seq_aware and int(fm.get("seq", 0)) != int(orig.get("seq", 0)):
+            # our rows were stamped against the OLD counter; if a
+            # concurrent delete cut at or past that stamp, merging now
+            # would mask the rows the moment they arrive — check the
+            # FRESH cuts and restamp if so (appends alone never trip
+            # this: they move seq but not cuts)
+            tombs = M.read_table(delta.sparkSession, path, "tombstones", fresh)
+            if tombs is not None and "as_of_seq" in tombs.columns:
+                mx = tombs.agg(F.max("as_of_seq")).first()[0]
+                if mx is not None and int(mx) >= int(orig.get("seq", 0)) + 1:
+                    raise _RestampRequired()
+        m2 = dict(fm)
+        m2["n_docs"] = int(fm["n_docs"]) + int(n_docs)
+        m2["sum_dl"] = int(fm["sum_dl"]) + int(sum_dl or 0)
+        if seq_aware:
+            m2["seq"] = int(fm.get("seq", 0)) + 1
+        m2 = M.with_txn(m2, txn)
+        t2 = M.add_gens(fresh["tables"], "postings", pp, gp)
+        t2 = M.add_gens(t2, "terms", tp, gt)
+        return t2, m2
 
-
-def repair_lex_index(path: str) -> dict:
-    """Crash-repair sweep for torn :func:`compact_lex_index` swaps over
-    BOTH stored tables: restore any ``bucket=N__old`` whose live dir is
-    missing, drop completed-swap leftovers and scratch trees (crash
-    states in :mod:`.storefs`). One ``listdir`` per table when the
-    index is healthy — ran automatically by :func:`load_lex_index` and
-    at the start of every compaction. A manifest-layout store has no
-    torn states (uncommitted generations are invisible) — no-op there;
-    reclamation is :func:`vacuum_lex_index`. Returns merged
-    ``{"restored": [...], "removed": [...]}`` lists."""
-    from auto_data_linkage_spark.operators.storefs import (
-        repair_swapped_dir,
-    )
-
-    if M.is_manifest_store(path):
-        return {"restored": [], "removed": []}
-    local = _local(path)
-    # whole-index rebuild swap first (restores a parked index whose
-    # promotion crashed; does NOT touch a sibling __rebuild tree — an
-    # in-progress rebuild may legitimately be writing there)
-    out: dict = repair_swapped_dir(local)
-    for table in ("postings", "terms"):
-        root = os.path.join(local, table)
-        swept = repair_swept_dirs(root, tmp_roots=(root + "__compact",))
-        out["restored"] += swept["restored"]
-        out["removed"] += swept["removed"]
-    return out
+    try:
+        return M.commit_with_retry(path, mutate)["meta"]
+    except M.AlreadyApplied as e:
+        return dict(e.snapshot["meta"])
+    except _RestampRequired:
+        if _attempts <= 1:
+            raise M.ManifestConflictError(
+                "this append keeps racing concurrent deletes whose "
+                "tombstone cuts cover its row stamps — serialize the "
+                "writers"
+            ) from None
+        # full re-run: re-read meta, re-encode, restamp past the new
+        # cuts (the losing attempt's generations are vacuumable orphans)
+        return append_lex_index(delta, path, txn=txn, _attempts=_attempts - 1)
 
 
 def delete_from_lex_index(
@@ -524,14 +401,9 @@ def delete_from_lex_index(
     must be enforced upstream (filter the ingest) rather than by
     tombstone. Returns ``{"deleted": n, "meta": updated-metadata}``.
 
-    Crash-retry safe (rename layout): artifacts commit tombstones-
-    first, so retrying a crashed delete no-ops instead of double-
-    appending the negative df deltas; the residue of an unretried
-    crash is conservative (overstated df / n_docs until rebuild) —
-    see the in-code contract at the write site. Manifest layout: all
-    three artifacts land in ONE manifest commit — a crash before it
-    leaves nothing visible and the retry deletes cleanly; there is no
-    residue at all.
+    Crash-retry safe: all three artifacts land in ONE manifest commit
+    — a crash before it leaves nothing visible and the retry deletes
+    cleanly; there is no residue at all.
 
     ``guard_txn=(app_id, batch_id)`` makes the delete CONDITIONAL on
     the index's stored idempotence token still being below
@@ -541,126 +413,24 @@ def delete_from_lex_index(
     state), closing the sync race where an overlapping
     :mod:`.sync` pass would otherwise re-cut tombstones AFTER the
     leader's re-append landed, permanently masking the revision rows.
-    Manifest layout only; the rename layout has no atomic commit, so
-    its syncs keep a single-concurrent-writer contract.
     """
-    if M.is_manifest_store(path):
-        # concurrency: a delete racing another commit re-RUNS against
-        # the fresh snapshot (not a cheap merge — its df deltas and
-        # counts were computed from the snapshot it read, so a racing
-        # append/compaction/rebuild makes them stale). See
-        # manifestfs.retry_on_conflict.
-        return M.retry_on_conflict(
-            lambda: _delete_manifest(spark, path, ids, guard_txn=guard_txn)
-        )
-    repair_lex_index(path)
-    local = _local(path)
-    with open(os.path.join(local, "index.json")) as f:
-        meta = json.load(f)
-    if meta.get("version") != _VERSION:
-        raise ValueError(
-            f"unsupported lex-index version {meta.get('version')!r}"
-        )
-    if guard_txn is not None and M.txn_version(
-        meta, guard_txn[0]
-    ) >= int(guard_txn[1]):
-        # best-effort only on the rename layout (no atomic commit to
-        # ride): syncs here keep a single-concurrent-writer contract
-        return {"deleted": 0, "meta": meta, "skipped_txn": True}
-    posts = spark.read.parquet(os.path.join(local, "postings"))
-    id_type = posts.schema["doc_id"].dataType
-    seq_aware = "seq" in meta
-    if not isinstance(ids, DataFrame):
-        from auto_data_linkage_spark.session import local_rows_df
-
-        ids = local_rows_df(
-            spark, [(i,) for i in ids], ["doc_id"]
-        ).select(F.col("doc_id").cast(id_type))
-    else:
-        ids = ids.select(F.col(ids.columns[0]).cast(id_type).alias("doc_id"))
-    ids = ids.distinct()
-    tomb_dir = os.path.join(local, "tombstones")
-    tombs = (
-        spark.read.parquet(tomb_dir) if os.path.isdir(tomb_dir) else None
+    # concurrency: a delete racing another commit re-RUNS against the
+    # fresh snapshot (not a cheap merge — its df deltas and counts were
+    # computed from the snapshot it read, so a racing append/compaction/
+    # rebuild makes them stale). See manifestfs.retry_on_conflict.
+    return M.retry_on_conflict(
+        lambda: _delete_once(spark, path, ids, guard_txn=guard_txn)
     )
-    if seq_aware:
-        # the live view already excludes earlier-masked rows, so a
-        # re-delete of a re-appended id counts only its LIVE rows; the
-        # given ids are NOT pre-filtered (a re-appended id needs a NEW
-        # tombstone at the current counter)
-        live = _mask_tombstoned(posts, tombs)
-    else:
-        if tombs is not None:
-            ids = ids.join(tombs, "doc_id", "left_anti")
-        live = posts
-    ids = ids.localCheckpoint(eager=True)
-
-    # one postings scan: the deleted docs' rows feed BOTH the exact
-    # n_docs/sum_dl decrement and the per-term negative df deltas.
-    # Materialized eagerly BEFORE any artifact is written, so the
-    # write order below cannot affect what is computed.
-    hit = live.join(ids, "doc_id", "left_semi").localCheckpoint(
-        eager=True
-    )
-    n_del, dl_del = (
-        hit.select("doc_id", "dl")
-        .distinct()
-        .agg(F.count("*"), F.coalesce(F.sum("dl"), F.lit(0)))
-        .first()
-    )
-    # CRASH-RETRY SAFETY: the three artifacts commit in tombstones →
-    # df-deltas → meta order. The tombstone batch goes FIRST so a retry
-    # of a crashed delete anti-joins to empty and NO-OPS — the one
-    # order under which a retry can never double-append the negative
-    # df deltas (which would permanently over-decrement df and break
-    # the bit-equal-to-fresh-build contract). The residues of each
-    # crash window are CONSERVATIVE and heal at the next rebuild:
-    # - after tombstones, before df deltas: docs correctly masked,
-    #   df/n_docs/sum_dl overstated (idf slightly low for the deleted
-    #   docs' terms);
-    # - after df deltas, before meta: df exact, n_docs/sum_dl
-    #   overstated (avgdl slightly high).
-    # The bit-equal contract holds for COMPLETED deletes; a crashed,
-    # retried delete serves the correct candidate set with slightly
-    # stale stats until rebuild_lex_index.
-    if seq_aware and not n_del:
-        # absent or already-masked ids need no new cut (see the
-        # manifest path) — nothing to write
-        return {"deleted": 0, "meta": meta}
-    out_ids = (
-        hit.select("doc_id").distinct()
-        .withColumn("as_of_seq", F.lit(int(meta["seq"])))
-        if seq_aware
-        else ids
-    )
-    out_ids.write.mode("append").parquet(tomb_dir)
-    if n_del:
-        (
-            hit.groupBy("bucket", "term")
-            .agg((-F.count("*")).alias("df"))
-            .write.mode("append")
-            .partitionBy("bucket")
-            .parquet(os.path.join(local, "terms"))
-        )
-    meta["n_docs"] = int(meta["n_docs"]) - int(n_del)
-    meta["sum_dl"] = int(meta["sum_dl"]) - int(dl_del)
-    _write_meta(local, meta)
-    return {"deleted": int(n_del), "meta": meta}
 
 
-def _delete_manifest(
+def _delete_once(
     spark: SparkSession, path: str, ids, *, guard_txn: tuple | None = None
 ) -> dict:
-    """Manifest-layout delete: the negative df deltas, the tombstone
+    """One delete attempt: the negative df deltas, the tombstone
     batch, and the decremented metadata all become visible in ONE
-    manifest commit — the delete is atomic (closing the crash windows
-    the rename layout can only order conservatively)."""
-    snap = M.read_manifest(path)
+    manifest commit — the delete is atomic."""
+    snap = _snapshot(path)
     meta = dict(snap["meta"])
-    if meta.get("version") != _VERSION:
-        raise ValueError(
-            f"unsupported lex-index version {meta.get('version')!r}"
-        )
     if guard_txn is not None and M.txn_version(
         meta, guard_txn[0]
     ) >= int(guard_txn[1]):
@@ -670,7 +440,7 @@ def _delete_manifest(
         # commit: a leader landing between this read and our commit
         # conflicts the version CAS, and the full re-run re-checks.
         return {"deleted": 0, "meta": meta, "skipped_txn": True}
-    local = _local(path)
+    local = M.local_path(path)
     posts = M.read_table(spark, path, "postings", snap)
     id_type = (
         posts if posts is not None
@@ -746,18 +516,6 @@ def _delete_manifest(
     return {"deleted": int(n_del), "meta": meta}
 
 
-def _bucket_file_counts(local: str, table: str) -> dict[str, int]:
-    root = os.path.join(local, table)
-    out: dict[str, int] = {}
-    for entry in os.listdir(root):
-        d = os.path.join(root, entry)
-        if entry.startswith("bucket=") and os.path.isdir(d):
-            out[entry] = sum(
-                1 for f in os.listdir(d) if f.endswith(".parquet")
-            )
-    return out
-
-
 def compact_lex_index(
     spark: SparkSession,
     path: str,
@@ -771,13 +529,12 @@ def compact_lex_index(
     rows are rewritten verbatim into fewer files; ``terms/`` df deltas
     are MERGED back to one row per term (``SUM(df)``), shrinking the
     probe-time aggregation to its build-time size. Only buckets over
-    ``max_files_per_bucket`` are touched; each rewritten directory is
-    swapped in with two renames (atomic at bucket granularity). A crash
-    between the renames is repaired by :func:`repair_lex_index`, which
-    both this function and :func:`load_lex_index` run first. SINGLE
-    WRITER + POSIX renames assumed — see :mod:`.storefs` (on object
-    stores run compaction from a maintenance window; concurrent
-    appends/probes during the swap are not safe).
+    ``max_files_per_bucket`` are touched; rewrites land in one fresh
+    generation per table and ALL rewritten buckets of BOTH tables (and
+    every purge-emptied bucket's disappearance) cut over in one atomic
+    manifest commit — readers pinned to the old manifest keep serving
+    it; superseded generations are reclaimed by
+    :func:`vacuum_lex_index`.
 
     Rewritten buckets are also PURGED: postings rows of tombstoned
     docs (:func:`delete_from_lex_index`) are dropped and merged
@@ -787,105 +544,9 @@ def compact_lex_index(
     RE-APPENDED ids survive the purge (the mask is sequence-aware).
     The tombstone rows themselves are kept (unrewritten buckets still
     need them; past cuts never mask newer appends).
-    Manifest layout: rewrites land in fresh generations and ALL
-    rewritten buckets of BOTH tables cut over in one atomic manifest
-    commit (readers pinned to the old manifest keep serving it);
-    superseded generations are reclaimed by :func:`vacuum_lex_index`.
     Returns ``{buckets_rewritten, files_before, files_after}``."""
-    if M.is_manifest_store(path):
-        return _compact_manifest(
-            spark,
-            path,
-            max_files_per_bucket=max_files_per_bucket,
-            target_rows_per_file=target_rows_per_file,
-        )
-    local = _local(path)
-    with open(os.path.join(local, "index.json")) as f:
-        meta = json.load(f)
-    if meta.get("version") != _VERSION:
-        raise ValueError(
-            f"unsupported lex-index version {meta.get('version')!r}"
-        )
-    repair_lex_index(path)
-    tomb_dir = os.path.join(local, "tombstones")
-    tombstones = (
-        spark.read.parquet(tomb_dir) if os.path.isdir(tomb_dir) else None
-    )
-    summary = {"buckets_rewritten": 0, "files_before": 0, "files_after": 0}
-    for table, merge in (("postings", False), ("terms", True)):
-        counts = _bucket_file_counts(local, table)
-        summary["files_before"] += sum(counts.values())
-        hot = sorted(
-            e for e, c in counts.items() if c > max_files_per_bucket
-        )
-        if not hot:
-            summary["files_after"] += sum(counts.values())
-            continue
-        root = os.path.join(local, table)
-        tmp_root = root + "__compact"
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        df = spark.read.option("basePath", root).parquet(
-            *[os.path.join(root, e) for e in hot]
-        )
-        if table == "postings" and tombstones is not None:
-            # purge = the same seq-aware mask probes apply: rows of
-            # re-appended ids survive the rewrite (only the masked
-            # generations' rows drop)
-            df = _mask_tombstoned(df, tombstones)
-        if merge:
-            # deltas collapse (delete's negatives included); a term
-            # whose deltas cancel to 0 carries no information — drop it
-            df = (
-                df.groupBy("bucket", "term")
-                .agg(F.sum("df").alias("df"))
-                .where(F.col("df") != 0)
-            )
-        rows = df.count()
-        files = max(1, -(-rows // target_rows_per_file))  # ceil
-        (
-            df.repartition(files, "bucket")
-            .sortWithinPartitions("bucket", "term")
-            .write.option("maxRecordsPerFile", target_rows_per_file)
-            .partitionBy("bucket")
-            .parquet(tmp_root)
-        )
-        for entry in hot:
-            new = os.path.join(tmp_root, entry)
-            if os.path.isdir(new):
-                swap_dir(os.path.join(root, entry), new)
-            else:
-                # purge/merge emptied the bucket — nothing was written
-                # for it; park-then-delete (crash-safe, see storefs)
-                remove_dir(os.path.join(root, entry))
-        shutil.rmtree(tmp_root, ignore_errors=True)
-        summary["buckets_rewritten"] += len(hot)
-        summary["files_after"] += sum(
-            _bucket_file_counts(local, table).values()
-        )
-    _write_meta(local, meta)
-    return summary
-
-
-def _compact_manifest(
-    spark: SparkSession,
-    path: str,
-    *,
-    max_files_per_bucket: int,
-    target_rows_per_file: int,
-) -> dict:
-    """Manifest-layout compaction: rewrite over-fragmented buckets into
-    one fresh generation per table, then commit every rewrite (and
-    every purge-emptied bucket's disappearance) in ONE manifest — the
-    multi-bucket, multi-table cutover is atomic and pinned readers are
-    untouched. Old generations stay on disk until
-    :func:`vacuum_lex_index`."""
-    snap = M.read_manifest(path)
-    meta = snap["meta"]
-    if meta.get("version") != _VERSION:
-        raise ValueError(
-            f"unsupported lex-index version {meta.get('version')!r}"
-        )
-    local = _local(path)
+    snap = _snapshot(path)
+    local = M.local_path(path)
     tombstones = M.read_table(spark, path, "tombstones", snap)
     tables = snap["tables"]
     summary = {"buckets_rewritten": 0, "files_before": 0, "files_after": 0}
@@ -930,7 +591,10 @@ def _compact_manifest(
         )
     if summary["buckets_rewritten"]:
         M.commit_manifest(
-            path, tables=tables, meta=meta, expected_version=snap["version"]
+            path,
+            tables=tables,
+            meta=snap["meta"],
+            expected_version=snap["version"],
         )
     return summary
 
@@ -939,68 +603,22 @@ def rebuild_lex_index(corpus: DataFrame, path: str, **build_kwargs) -> dict:
     """Rebuild the index IN PLACE from the current corpus and promote
     it atomically — the periodic from-scratch pass that resets
     accumulated tombstones, re-buckets after an ``n_buckets`` change,
-    and returns every artifact to its build-time compactness. The new
-    index is built into a sibling ``__rebuild`` tree (readers keep
-    serving the old index throughout), then promoted with the same
-    two-rename swap compaction uses; a crash between the renames is
-    healed by the sweep every load runs (the OLD index is restored and
-    keeps serving; the finished rebuild survives for the next
-    attempt). Same single-writer + POSIX contract (:mod:`.storefs`).
+    and returns every artifact to its build-time compactness. The
+    rebuild writes fresh generations and promotes them by committing a
+    manifest that REPLACES every table (and drops the tombstone mask)
+    — a one-commit whole-store cutover; readers pinned to the old
+    manifest keep serving it bit-exactly until :func:`vacuum_lex_index`
+    reclaims it, and a crash before the commit leaves the old index
+    untouched (the orphan generations are vacuumed later).
 
     Tombstones do NOT carry over — the rebuild reflects exactly the
     corpus passed in, the one moment deleted ids become reusable.
     ``build_kwargs`` forward to :func:`build_lex_index`. Returns the
-    new metadata.
-
-    Manifest layout: the rebuild writes fresh generations and promotes
-    them by committing a manifest that REPLACES every table (and drops
-    the tombstone mask) — a one-commit whole-store cutover with no
-    rename at all; readers pinned to the old manifest keep serving it
-    bit-exactly until :func:`vacuum_lex_index` reclaims it, and a
-    crash before the commit leaves the old index untouched (the orphan
-    generations are vacuumed later)."""
-    if M.is_manifest_store(path):
-        # same parameter defaults as build_lex_index (layout parity);
-        # reject kwargs the manifest path can't honor instead of
-        # silently ignoring them
-        kw = dict(build_kwargs)
-        want = kw.pop("layout", "manifest")
-        if want != "manifest":
-            raise ValueError(
-                "rebuild cannot change a store's layout in place "
-                f"(store is manifest-layout, got layout={want!r}); "
-                "build a new index at a new path instead"
-            )
-        args = {
-            "id_col": kw.pop("id_col", "doc_id"),
-            "text_col": kw.pop("text_col", "text"),
-            "n_buckets": kw.pop("n_buckets", 64),
-        }
-        if kw:
-            raise TypeError(
-                f"rebuild_lex_index got unexpected kwargs {sorted(kw)}"
-            )
-        snap = M.read_manifest(path)
-        return _manifest_build_commit(
-            corpus, path, expected_version=snap["version"], **args
-        )["meta"]
-    local = _local(path)
-    # a rebuild keeps the store's layout: this is a rename store, so
-    # the scratch build must be rename too (the flipped manifest
-    # default must not leak a manifest log into the swap)
-    want = build_kwargs.pop("layout", "rename")
-    if want != "rename":
-        raise ValueError(
-            "rebuild cannot change a store's layout in place (store "
-            f"is rename-layout, got layout={want!r}); build a new "
-            "index at a new path instead"
-        )
-    tmp = local + "__rebuild"
-    shutil.rmtree(tmp, ignore_errors=True)
-    meta = build_lex_index(corpus, tmp, layout="rename", **build_kwargs)
-    repair_lex_index(path)  # clear any parked __old before the swap
-    swap_dir(local, tmp)
-    return meta
+    new metadata."""
+    snap = _snapshot(path)
+    return build_lex_index(
+        corpus, path, _expected_version=snap["version"], **build_kwargs
+    )
 
 
 def lex_index_sink(
@@ -1014,31 +632,21 @@ def lex_index_sink(
     corpus ingestion with serveable lexical search (the sparse mirror
     of :func:`annindex.ann_index_sink`, same replay caveat: dedup ids
     upstream). ``compact_over`` runs inline maintenance after each
-    append when any bucket exceeds that many files — this assumes the
-    sink is the index's ONLY writer AND no other session probes during
-    the swap window (a concurrent reader that resolved file paths
-    before the swap can miss a bucket); for concurrently-served
-    indexes leave it unset and run :func:`compact_lex_index` from an
-    explicit maintenance window. POSIX-rename assumption in
-    :mod:`.storefs`.
+    append when any bucket exceeds that many files; concurrent readers
+    are never disturbed (they pinned the prior manifest).
 
-    A MANIFEST-layout index upgrades both caveats, and with ``app_id``
-    set becomes EXACTLY-ONCE: a replayed batch whose append crashed
+    With ``app_id`` set the sink is EXACTLY-ONCE: a replayed batch
+    whose append crashed
     before its commit re-appends exactly once (nothing uncommitted is
     visible); a replayed batch whose append COMMITTED but whose
     streaming checkpoint didn't advance is recognized by its
     ``(app_id, batch_id)`` token — recorded atomically in the same
-    manifest commit as the data — and skipped; and inline compaction
-    never disturbs concurrent readers (they pinned the prior
-    manifest). ``app_id`` names the query's checkpoint lineage and is
+    manifest commit as the data — and skipped. ``app_id`` names the query's checkpoint lineage and is
     deliberately OPT-IN (default None = no token, at-least-once): a
     shared implicit default would silently DROP the first batches of
     any new query whose fresh checkpoint resets batch ids to 0 —
     restarting from a new checkpoint directory must come with a new
-    app_id. On the rename layout the token is recorded in
-    ``index.json`` AFTER the data lands (best-effort: it closes the
-    clean-replay window, not the crash-between window — that needs the
-    manifest layout)."""
+    app_id."""
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1062,14 +670,10 @@ def vacuum_lex_index(
     path: str, *, keep_manifests: int = 2, min_age_seconds: float = 3600.0
 ) -> dict:
     """Reclaim generations superseded by compaction/rebuild/delete and
-    orphans of crashed writers (manifest layout only) — see
-    :func:`manifestfs.vacuum` for the reader-pinning grace contract and
-    the ``min_age_seconds`` misuse guard."""
-    if not M.is_manifest_store(path):
-        raise ValueError(
-            "vacuum applies to manifest-layout indexes only; rename-"
-            "layout stores reclaim inline (two-rename swap + repair)"
-        )
+    orphans of crashed writers — see :func:`manifestfs.vacuum` for the
+    reader-pinning grace contract and the ``min_age_seconds`` misuse
+    guard."""
+    _snapshot(path)
     return M.vacuum(
         path, keep_manifests=keep_manifests, min_age_seconds=min_age_seconds
     )
@@ -1078,76 +682,34 @@ def vacuum_lex_index(
 def load_lex_index(
     spark: SparkSession, path: str, *, version: int | None = None
 ) -> LexIndex:
-    """Handle over the stored index. Manifest layout: the manifest
-    read here PINS the snapshot — the returned DataFrames name
-    immutable generation directories, so concurrent appends,
-    compactions, deletes, and whole-store rebuilds committing later
-    never change what this handle serves (until a vacuum reclaims
-    generations older than its manifest). ``version`` TIME-TRAVELS to
-    that exact committed snapshot (still retained by vacuum's
-    keep-window) — e.g. serve the pre-delete index for an audit, or
-    diff top-k across versions; rename-layout stores have no history
-    (``version`` raises there)."""
-    if version is not None and not M.is_manifest_store(path):
-        raise ValueError(
-            "version= time travel needs a manifest-layout index "
-            '(build_lex_index(layout="manifest"))'
-        )
-    if M.is_manifest_store(path):
-        snap = M.read_manifest(path, version)
-        meta = snap["meta"]
-        if meta.get("version") != _VERSION:
-            raise ValueError(
-                f"unsupported lex-index version {meta.get('version')!r}"
-            )
-        spark_read = {
-            t: M.read_table(spark, path, t, snap)
-            for t in ("postings", "terms", "tombstones")
-        }
-        return LexIndex(
-            meta=meta,
-            postings=(
-                spark_read["postings"]
-                if spark_read["postings"] is not None
-                else spark.createDataFrame([], meta["postings_schema"])
-            ),
-            terms=(
-                spark_read["terms"]
-                if spark_read["terms"] is not None
-                else spark.createDataFrame([], meta["terms_schema"])
-            ),
-            tombstones=spark_read["tombstones"],
-        )
-    # torn-compaction sweep first (one listdir per table when healthy) —
-    # a crash between compaction's two renames otherwise silently
-    # serves top-k MISSING the parked bucket's terms (no error).
-    repair_lex_index(path)
-    local = _local(path)
-    with open(os.path.join(local, "index.json")) as f:
-        meta = json.load(f)
-    if meta.get("version") != _VERSION:
-        raise ValueError(
-            f"unsupported lex-index version {meta.get('version')!r}"
-        )
-    from pyspark.errors import AnalysisException
-
-    def _read(table: str, schema_key: str) -> DataFrame:
-        try:
-            return spark.read.parquet(os.path.join(local, table))
-        except AnalysisException:
-            # empty build: no data files on disk — schema from metadata
-            return spark.createDataFrame([], meta[schema_key])
-
-    tomb_dir = os.path.join(local, "tombstones")
+    """Handle over the stored index. The manifest read here PINS the
+    snapshot — the returned DataFrames name immutable generation
+    directories, so concurrent appends, compactions, deletes, and
+    whole-store rebuilds committing later never change what this handle
+    serves (until a vacuum reclaims generations older than its
+    manifest). ``version`` TIME-TRAVELS to that exact committed
+    snapshot (still retained by vacuum's keep-window) — e.g. serve the
+    pre-delete index for an audit, or diff top-k across versions."""
+    snap = _snapshot(path, version)
+    meta = snap["meta"]
+    tables = {
+        t: M.read_table(spark, path, t, snap)
+        for t in ("postings", "terms", "tombstones")
+    }
+    # an EMPTY build writes no parquet data files: schemas from meta
     return LexIndex(
         meta=meta,
-        postings=_read("postings", "postings_schema"),
-        terms=_read("terms", "terms_schema"),
-        tombstones=(
-            spark.read.parquet(tomb_dir)
-            if os.path.isdir(tomb_dir)
-            else None
+        postings=(
+            tables["postings"]
+            if tables["postings"] is not None
+            else spark.createDataFrame([], meta["postings_schema"])
         ),
+        terms=(
+            tables["terms"]
+            if tables["terms"] is not None
+            else spark.createDataFrame([], meta["terms_schema"])
+        ),
+        tombstones=tables["tombstones"],
     )
 
 

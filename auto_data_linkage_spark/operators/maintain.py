@@ -21,7 +21,7 @@ maintenance pass an operator schedules:
 Non-index stores ride the same pass: a registered consumer (or an
 ``extra_stores`` entry) whose meta identifies a streaming-linker state
 store (``kind="linkage-state"``), another corpus snapshot (the
-merge-layout linker's state, ``kind="corpus"``), or a manifest-layout
+merge-layout linker's state, ``kind="corpus"``), or a
 domain edge store (:func:`..operators.graph.init_edge_store` — the
 continuous-crawl link graph) gets the compact/checkpoint/vacuum
 treatment instead of a sync.
@@ -62,24 +62,15 @@ __all__ = ["maintain_corpus"]
 def _index_kind(path: str) -> str | None:
     """'lex' / 'ann' / 'linkage' (snapshot-layout streaming-linker
     state) / 'corpus' (a corpus snapshot store — e.g. the merge-layout
-    linker state) / 'edges' (a manifest-layout domain edge store,
+    linker state) / 'edges' (a domain edge store,
     :func:`..operators.graph.init_edge_store`) from the store's meta;
     None when the path no longer holds a readable store (a retired
     consumer whose store was deleted without
-    :func:`..sources.corpusstore.unregister_corpus_consumer`). Rename-
-    layout edge stores are bare parquet directories with no meta —
-    undetectable here by design (their compaction is the POSIX
-    single-writer path; schedule it next to the sink, not from this
-    object-store-safe pass)."""
+    :func:`..sources.corpusstore.unregister_corpus_consumer`)."""
     try:
         meta = M.read_manifest(path)["meta"]
     except FileNotFoundError:
-        if not os.path.exists(os.path.join(M.local_path(path), "index.json")):
-            return None
-        import json
-
-        with open(os.path.join(M.local_path(path), "index.json")) as f:
-            meta = json.load(f)
+        return None
     if meta.get("kind") == "linkage-state":
         return "linkage"
     if meta.get("kind") == "corpus":
@@ -143,21 +134,20 @@ def _maintain_store(
                     "current": vk.get("edge_state")
                     == G._edge_state_key(snap),
                 }
-    if M.is_manifest_store(path):
-        if checkpoint:
-            M.checkpoint_manifest_log(path)
-        if kind == "corpus":
-            out["vacuum"] = C.vacuum_corpus_snapshot(
-                path,
-                keep_manifests=keep_versions,
-                min_age_seconds=min_age_seconds,
-            )
-        else:
-            out["vacuum"] = M.vacuum(
-                path,
-                keep_manifests=keep_versions,
-                min_age_seconds=min_age_seconds,
-            )
+    if checkpoint:
+        M.checkpoint_manifest_log(path)
+    if kind == "corpus":
+        out["vacuum"] = C.vacuum_corpus_snapshot(
+            path,
+            keep_manifests=keep_versions,
+            min_age_seconds=min_age_seconds,
+        )
+    else:
+        out["vacuum"] = M.vacuum(
+            path,
+            keep_manifests=keep_versions,
+            min_age_seconds=min_age_seconds,
+        )
     return out
 
 
@@ -203,7 +193,7 @@ def maintain_corpus(
     (:class:`..streaming.linkage.StreamingLinker`), either layout:
     the snapshot layout gets checkpoint + vacuum, the merge layout
     (a corpus snapshot store) gets compaction + checkpoint + vacuum.
-    A manifest-layout edge store (:func:`.graph.edge_store_sink` —
+    An edge store (:func:`.graph.edge_store_sink` —
     its feed is the crawl stream, not this corpus, so it is never a
     registered consumer) gets compaction + checkpoint + vacuum too;
     its ranks are a derived product (:func:`.graph.refresh_pagerank`;
@@ -292,14 +282,13 @@ def maintain_corpus(
                 rebuild_over=rebuild_over, compact_over=compact_over,
             )
         report["synced"][idx] = out
-        if M.is_manifest_store(idx):
-            if checkpoint:
-                M.checkpoint_manifest_log(idx)
-            report["index_vacuum"][idx] = M.vacuum(
-                idx,
-                keep_manifests=keep_versions,
-                min_age_seconds=min_age_seconds,
-            )
+        if checkpoint:
+            M.checkpoint_manifest_log(idx)
+        report["index_vacuum"][idx] = M.vacuum(
+            idx,
+            keep_manifests=keep_versions,
+            min_age_seconds=min_age_seconds,
+        )
     for path in extra_stores or []:
         kind = _index_kind(path)
         if kind is None:

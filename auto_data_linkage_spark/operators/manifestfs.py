@@ -1,9 +1,7 @@
-"""Manifest-committed store layout — the object-store-safe second
-implementation of the maintenance seam (:mod:`.storefs` is the POSIX
-rename-swap one). Chosen per store at build time (``layout="manifest"``)
-and auto-detected afterwards; the persisted stores (lexical index, ANN
-index, edge store) run every lifecycle operation through whichever seam
-the store was built with.
+"""Manifest-committed store layout — the one durability protocol of the
+persisted stores (lexical index, ANN index, edge store, streaming-
+linkage state, corpus snapshot store): every lifecycle operation of
+every store commits through this module.
 
 Layout under ``<root>/``::
 
@@ -16,7 +14,7 @@ A **manifest** is one JSON object naming every live data directory of
 every table::
 
     {"version": 7,
-     "meta": {...store metadata (index.json's content lives here)...},
+     "meta": {...store metadata (parameters, counters, tokens)...},
      "tables": {"postings":   {"bucket=3": ["gen=1", "gen=5"], ...},
                 "tombstones": {"": ["gen=2"]}}}
 
@@ -44,9 +42,7 @@ Crash model: a writer that dies before its commit leaves orphan
 ``gen=N`` directories that no manifest references — invisible to every
 reader, removed by :func:`vacuum`. There is NO torn state and NO
 repair sweep; the retry of a crashed append/delete re-runs cleanly
-(nothing of the failed attempt was committed). Compare storefs.py,
-whose two-rename swap has two torn states needing load-time repair and
-which is unusable on object stores (no atomic rename).
+(nothing of the failed attempt was committed).
 
 What still assumes a single MAINTENANCE writer: generation numbers are
 allocated from a directory listing and commits race on the version
@@ -74,8 +70,6 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .storefs import local_path
-
 MANIFEST_DIR = "_manifests"
 
 __all__ = [
@@ -85,6 +79,8 @@ __all__ = [
     "use_commit_log",
     "clear_commit_log",
     "is_manifest_store",
+    "reject_legacy_store",
+    "local_path",
     "init_manifest_store",
     "read_manifest",
     "commit_manifest",
@@ -145,6 +141,11 @@ class TransientCommitError(RuntimeError):
     protocol to absorb; anything else propagates as a hard error."""
 
 
+def local_path(path: str) -> str:
+    """Strip a ``file://`` scheme so ``os`` calls work on the path."""
+    return path[7:] if path.startswith("file://") else path
+
+
 def _mdir(root: str) -> str:
     return os.path.join(local_path(root), MANIFEST_DIR)
 
@@ -194,6 +195,37 @@ def is_manifest_store(root: str) -> bool:
     if be is not None:
         return bool(_manifest_names(root))
     return os.path.isdir(_mdir(root))
+
+
+# Top-level entries of a store written by the retired in-place layout
+# (``index.json`` metadata, live ``bucket=N`` edge dirs, per-batch
+# ``batch=N`` / ``version=N`` snapshots) — never present in a manifest
+# store's root, which holds only ``_manifests/`` and table directories.
+_LEGACY_MARKERS = ("index.json", "bucket=", "batch=", "version=")
+
+
+def reject_legacy_store(root: str, rebuild: str) -> None:
+    """Raise ``ValueError`` when ``root`` holds a store in the retired
+    in-place (two-rename swap) layout instead of a manifest log — such
+    stores are no longer readable, and without this check they would
+    surface as a confusing "no readable manifest" error. ``rebuild``
+    names the call that recreates the store. A manifest store, a
+    missing path, or an empty directory passes (one ``isdir`` on the
+    healthy path)."""
+    if is_manifest_store(root):
+        return
+    local = local_path(root)
+    if not os.path.isdir(local):
+        return
+    found = sorted(
+        e for e in os.listdir(local) if e.startswith(_LEGACY_MARKERS)
+    )
+    if found:
+        raise ValueError(
+            f"{root} holds a store in the retired in-place layout "
+            f"({found[0]} without a {MANIFEST_DIR}/ log), which can no "
+            f"longer be opened — rebuild it with {rebuild}"
+        )
 
 
 def _manifest_names(root: str) -> list[str]:
@@ -675,7 +707,8 @@ def read_table(
     (``None`` when the table has none). Partitioned tables read with
     ``basePath=<table root>`` so the partition column (``bucket=``/
     ``cell=``) is recovered and predicate/partition pruning work
-    exactly as in the rename layout; the ``gen`` column is dropped."""
+    exactly as over a plain partitioned directory; the ``gen`` column is
+    dropped."""
     paths = table_paths(root, table, snapshot)
     if not paths:
         return None

@@ -1,15 +1,13 @@
 """Manifest-layout corpus snapshots — `layout.py`'s corpus MERGE
-re-based onto the ONE commit protocol the persisted stores already use
-(:mod:`..operators.manifestfs`), closing the two-protocols seam.
+re-based onto the ONE commit protocol every persisted store uses
+(:mod:`..operators.manifestfs`).
 
 Why a second corpus layout exists at all: :func:`..sources.layout.
 upsert_corpus` mutates partition directories IN PLACE (dynamic
 partition overwrite), which is fast and fine on a POSIX filesystem but
 structurally torn-prone — the overwrite is not atomic across
 partitions, so a mid-write death leaves some directories new and some
-old, and `upsert_corpus_versioned` exists precisely to TRACK that torn
-state in a `_commits/` log. The snapshot layout removes the torn state
-instead of tracking it:
+old. The snapshot layout removes the torn state:
 
 - an upsert writes the merged rows of the touched partitions into a
   fresh immutable ``data/gen=N`` directory and publishes them by ONE
@@ -26,10 +24,10 @@ instead of tracking it:
 - it works on object stores (no renames anywhere; the log rides any
   CommitStore via ``manifestfs.use_commit_log``).
 
-The in-place layout stays the right call for single-writer POSIX-local
-corpora where rewrite-churn of hot partitions matters (no gen
-accumulation, no vacuum to schedule); this one is the multi-writer /
-object-store / audit-trail path. Partition-granular semantics are
+The in-place :func:`..sources.layout.upsert_corpus` stays the right
+call for single-writer POSIX-local corpora where rewrite-churn of hot
+partitions matters (no gen accumulation, no vacuum to schedule); this
+one is the multi-writer / object-store / audit-trail path. Partition-granular semantics are
 IDENTICAL to :func:`..sources.layout.upsert_corpus`: within touched
 partitions, corpus rows whose ``key`` appears in the delta are
 replaced and all delta rows inserted; untouched partitions are not
@@ -47,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import manifestfs as M
-from ..operators.storefs import local_path
+from ..operators.manifestfs import local_path
 
 _VERSION = 1
 _TABLE = "data"
@@ -301,7 +299,7 @@ def upsert_corpus_snapshot(
     generation becomes a vacuumable orphan. Two upserts of DISJOINT
     partitions therefore both land, in some serial order, with no lost
     update — the scenario plain dynamic partition overwrite silently
-    corrupts and `upsert_corpus_versioned` can only abort on.
+    corrupts.
 
     Returns ``{"partitions": n_touched, "rows_written": n, "version"}``.
     """

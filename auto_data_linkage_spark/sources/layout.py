@@ -125,8 +125,8 @@ def _merge_touched(
     key: str,
     partition_by: list[str],
 ):
-    """The read/merge phase shared by :func:`upsert_corpus` and
-    :func:`upsert_corpus_versioned`: returns ``(touched, merged)`` where
+    """The read/merge phase of :func:`upsert_corpus`: returns
+    ``(touched, merged)`` where
     ``touched`` is the delta's distinct partition-value tuples and
     ``merged`` the eagerly-materialized replacement rows for exactly
     those partitions (surviving old rows + all delta rows)."""
@@ -217,21 +217,6 @@ def upsert_corpus(
     touched, merged = _merge_touched(spark, path, delta, key, partition_by)
     if not touched:  # empty delta: nothing to merge, nothing to rewrite
         return {"partitions": 0, "rows_written": 0}
-    _overwrite_touched(
-        spark, path, merged, partition_by, sort_by, max_records_per_file
-    )
-    n = merged.count()  # safe: checkpointed, no file-source lineage
-    return {"partitions": len(touched), "rows_written": n}
-
-
-def _overwrite_touched(
-    spark: SparkSession,
-    path: str,
-    merged: DataFrame,
-    partition_by: list[str],
-    sort_by: list[str] | None,
-    max_records_per_file: int,
-) -> None:
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
@@ -246,20 +231,17 @@ def _overwrite_touched(
         )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-class CommitConflictError(RuntimeError):
-    """Raised when :func:`upsert_corpus_versioned` exhausts its retries
-    against concurrent writers touching the same partitions."""
+    n = merged.count()  # safe: checkpointed, no file-source lineage
+    return {"partitions": len(touched), "rows_written": n}
 
 
 class CommitStore:
-    """The ONE storage primitive the optimistic-commit protocol needs:
-    atomic create-if-absent of a named record (exactly one writer can
-    win a version), plus atomic replace, remove, and listing. The
-    protocol itself (:func:`upsert_corpus_versioned`) is
+    """The ONE storage primitive the manifest commit protocol
+    (:mod:`..operators.manifestfs`) needs: atomic create-if-absent of a
+    named record (exactly one writer can win a version), plus atomic
+    replace, remove, and listing. The protocol itself is
     backend-agnostic — anything that can conditionally create an
-    object can host the commit log:
+    object can host the commit log (``manifestfs.use_commit_log``):
 
     - :class:`PosixCommitStore` — ``O_CREAT|O_EXCL`` + ``os.replace``
       on a local/NFS directory (the single-cluster default);
@@ -739,202 +721,6 @@ class S3CommitStore(CommitStore):
             return max(0.0, (now - head["LastModified"]).total_seconds())
         except (ClientError, KeyError):
             return None  # unknown age: the vacuum floor degrades SAFE
-
-
-def _commit_log_dir(path: str) -> str:
-    import os
-
-    local = path[7:] if path.startswith("file://") else path
-    if "://" in local:
-        raise ValueError(
-            "upsert_corpus_versioned's default commit log needs a "
-            "local/file: path for its POSIX atomic-create; for object "
-            "stores pass a CommitStore backed by a conditional put "
-            "(S3 If-None-Match / GCS generation-match preconditions) "
-            "or use a transactional table format (Delta/Iceberg "
-            f"MERGE). Got: {path}"
-        )
-    return os.path.join(local, "_commits")
-
-
-def _read_commits(store: CommitStore) -> list[dict]:
-    out = []
-    for name, rec in store.list_records().items():
-        if rec is None:
-            # a token mid-write by its owner: treat as pending with
-            # unknown footprint — conservatively conflicting
-            out.append({"version": int(name[1:-5]), "partitions": None})
-        else:
-            out.append(rec)
-    return sorted(out, key=lambda c: c["version"])
-
-
-def failed_commits(
-    path: str | None = None, *, store: CommitStore | None = None
-) -> list[dict]:
-    """Failed-commit tokens whose touched partitions are NOT yet covered
-    by a later committed version — i.e. partitions that may still hold
-    torn data from a mid-overwrite death and need repair (re-run the
-    failed upsert, or any upsert touching those partitions).
-
-    The torn list is an OVER-approximation: a writer that died after
-    winning its version token but before replacing any partition
-    directory still records ``state: failed`` with its full intended
-    partition list, so healthy partitions can be reported as torn.
-    Repairing (re-upserting) a healthy partition is a harmless rewrite
-    — the conservative direction for a durability check."""
-    if store is None and path is None:
-        raise ValueError("failed_commits needs either path= or store=")
-    store = store or PosixCommitStore(_commit_log_dir(path))
-    commits = _read_commits(store)
-    out = []
-    for c in commits:
-        if c.get("state") != "failed":
-            continue
-        torn = {tuple(t) for t in (c.get("partitions") or [])}
-        for later in commits:
-            if (
-                later.get("state") == "committed"
-                and later["version"] > c["version"]
-            ):
-                torn -= {tuple(t) for t in (later.get("partitions") or [])}
-        if torn:
-            out.append({**c, "unrepaired": sorted(torn)})
-    return out
-
-
-def upsert_corpus_versioned(
-    spark: SparkSession,
-    path: str,
-    delta: DataFrame,
-    *,
-    key: str,
-    partition_by: list[str],
-    sort_by: list[str] | None = None,
-    max_records_per_file: int = 5_000_000,
-    writer_id: str | None = None,
-    max_retries: int = 3,
-    conflict_wait_s: float = 60.0,
-    store: CommitStore | None = None,
-) -> dict:
-    """:func:`upsert_corpus` with OPTIMISTIC CONCURRENCY against other
-    writers of the same corpus — the lost-update scenario plain
-    dynamic-partition-overwrite cannot see: writer B reads a partition,
-    writer A rewrites it, writer B's overwrite then silently discards
-    A's merge.
-
-    Protocol (Delta-style linear version history on a ``_commits/``
-    log under the corpus root):
-
-    1. observe the current committed version V (and wait for any
-       still-pending commit ≤ V to finish);
-    2. run the read/merge phase against that snapshot;
-    3. ACQUIRE version V+1 by atomically creating ``_commits/v{V+1}.json``
-       (``O_CREAT|O_EXCL`` — exactly one writer can win a version).
-       Success proves no commit intervened between the read and the
-       acquisition, so the merge is based on the latest state and the
-       partition overwrite proceeds; the token then records the touched
-       partitions and flips to ``state: committed``.
-    4. losing the race means a concurrent commit landed first: the
-       merge may be stale, so re-read and retry (``max_retries`` times,
-       waiting up to ``conflict_wait_s`` for the winner's data files to
-       land), then raise :class:`CommitConflictError` loudly rather
-       than overwrite on a stale snapshot.
-
-    A writer that acquires a version and DIES before committing leaves
-    a pending token; later writers fail after ``conflict_wait_s`` with
-    a :class:`CommitConflictError` naming the stuck version (manual
-    cleanup — the honest failure mode without a heartbeat, stated
-    rather than hidden). A writer whose OVERWRITE raises (dynamic
-    partition overwrite is not atomic — an executor loss can leave
-    some partition directories replaced and others not) flips its
-    token to ``state: failed`` KEEPING the touched-partition list, so
-    the torn partitions are discoverable (:func:`failed_commits`)
-    instead of hidden behind a clean-looking history; any later
-    committed upsert covering those partitions repairs them.
-
-    The commit log lives behind :class:`CommitStore` — POSIX
-    ``O_CREAT|O_EXCL`` by default (local/file: paths, asserted); pass
-    ``store=`` for any backend with a conditional-put primitive (see
-    :class:`CommitStore` for the S3/GCS mapping).
-
-    Returns ``{"partitions": n, "rows_written": n, "version": V+1}``.
-    """
-    import time
-    import uuid
-
-    store = store or PosixCommitStore(_commit_log_dir(path))
-    wid = writer_id or uuid.uuid4().hex[:12]
-
-    def _wait_pending(upto: float) -> None:
-        while True:
-            pending = [
-                c
-                for c in _read_commits(store)
-                if c.get("state") not in ("committed", "failed")
-            ]
-            if not pending:
-                return
-            if time.monotonic() > upto:
-                raise CommitConflictError(
-                    "commit(s) still pending after "
-                    f"{conflict_wait_s}s: versions "
-                    f"{[c['version'] for c in pending]} — a writer died "
-                    "mid-commit or is stuck; inspect the commit store "
-                    "and remove the stale token(s)"
-                )
-            time.sleep(0.1)
-
-    for _attempt in range(max_retries + 1):
-        deadline = time.monotonic() + conflict_wait_s
-        _wait_pending(deadline)
-        commits = _read_commits(store)
-        version = commits[-1]["version"] if commits else 0
-
-        touched, merged = _merge_touched(
-            spark, path, delta, key, partition_by
-        )
-        if not touched:
-            return {"partitions": 0, "rows_written": 0, "version": version}
-
-        token_name = f"v{version + 1}.json"
-        record = {
-            "version": version + 1,
-            "writer": wid,
-            "partitions": [list(t) for t in touched],
-            "state": "pending",
-        }
-        if not store.create_exclusive(token_name, record):
-            # lost the race — the merge may be stale; re-read and retry
-            continue
-        try:
-            _overwrite_touched(
-                spark, path, merged, partition_by, sort_by,
-                max_records_per_file,
-            )
-        except BaseException:
-            # the overwrite is NOT atomic: some partitions may already
-            # be replaced. Record the failure with its footprint so
-            # later writers/readers can detect and repair the torn
-            # partitions — deleting the token would show a clean
-            # history over inconsistent data.
-            try:
-                store.replace(token_name, {**record, "state": "failed"})
-            except Exception:
-                pass
-            raise
-        store.replace(token_name, {**record, "state": "committed"})
-        n = merged.count()
-        return {
-            "partitions": len(touched),
-            "rows_written": n,
-            "version": version + 1,
-        }
-    raise CommitConflictError(
-        f"lost the commit race {max_retries + 1} times on {path}; "
-        "concurrent writers are saturating this corpus — serialize "
-        "them or move to a transactional table format"
-    )
 
 
 def corpus_manifest(

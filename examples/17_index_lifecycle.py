@@ -1,10 +1,10 @@
-"""Index LIFECYCLE (round 10): crash repair, deletion, adaptive
-refresh — the maintenance story a long-running serving store needs.
+"""Index LIFECYCLE: crash safety, deletion, adaptive refresh — the
+maintenance story a long-running serving store needs.
 
-1. a compaction crash between its two renames leaves a bucket parked
-   as ``bucket=N__old`` — a plain ``load_lex_index`` heals it (the
-   repair sweep runs on every load/append/compaction) and serves
-   BIT-IDENTICAL results;
+1. a compaction that crashes before its manifest commit changes
+   nothing a reader sees — ``load_lex_index`` serves BIT-IDENTICAL
+   results from the last committed manifest, and ``vacuum_lex_index``
+   reclaims the crashed rewrite's orphan generation;
 2. ``delete_from_lex_index`` removes documents as DELTAS (tombstone +
    negative df rows): post-delete BM25 equals an index freshly built
    without the docs, exactly;
@@ -31,7 +31,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from auto_data_linkage_spark.operators import lexindex as L
-from auto_data_linkage_spark.operators import storefs
+from auto_data_linkage_spark.operators import manifestfs as M
 from auto_data_linkage_spark.operators.graph import (
     delete_domains_from_edge_store,
     edge_store_sink,
@@ -64,31 +64,38 @@ def main() -> None:
         docs.orderBy("doc_id").limit(3), n_terms=6
     ).localCheckpoint(eager=False)
 
-    # 1. torn compaction -> load heals it
+    # 1. crashed compaction -> readers unaffected, orphan vacuumed
     lex = os.path.join(root, "lex")
-    L.build_lex_index(docs, lex, n_buckets=4, layout="rename")
+    L.build_lex_index(docs, lex, n_buckets=4)
     want = topk(spark, lex, probes)
     postings = os.path.join(lex, "postings")
-    bucket = sorted(
-        e for e in os.listdir(postings) if e.startswith("bucket=")
-    )[0]
-    os.rename(  # simulate the crash state between the two renames
-        os.path.join(postings, bucket),
-        os.path.join(postings, bucket + storefs.OLD_SUFFIX),
-    )
-    print("torn state:", [e for e in os.listdir(postings)
-                          if e.endswith(storefs.OLD_SUFFIX)])
-    assert topk(spark, lex, probes) == want  # load ran the sweep
-    print("after plain load: healed, top-k bit-identical ->",
-          [e for e in os.listdir(postings)
-           if e.endswith(storefs.OLD_SUFFIX)] == [])
+    gens = set(os.listdir(postings))
+    real = M.commit_manifest
+
+    def die(*a, **k):
+        raise RuntimeError("compaction died before its commit")
+
+    M.commit_manifest = die  # simulate a crash right before the commit
+    try:
+        L.compact_lex_index(spark, lex, max_files_per_bucket=0)
+    except RuntimeError as e:
+        print("compaction died:", e)
+    finally:
+        M.commit_manifest = real
+    orphans = sorted(set(os.listdir(postings)) - gens)
+    print("orphan generations:", orphans,
+          "| top-k bit-identical:", topk(spark, lex, probes) == want)
+    assert orphans and topk(spark, lex, probes) == want
+    L.vacuum_lex_index(lex, min_age_seconds=0)
+    print("after vacuum, orphans left:",
+          sorted(set(orphans) & set(os.listdir(postings))))
 
     # 2. deletion as deltas: equals a fresh build without the docs
     victims = docs.where(F.col("doc_id") % 5 == 0).select("doc_id")
     out = L.delete_from_lex_index(spark, lex, victims)
     fresh = os.path.join(root, "lex_fresh")
     L.build_lex_index(docs.where(F.col("doc_id") % 5 != 0), fresh,
-                      n_buckets=4, layout="rename")
+                      n_buckets=4)
     same = topk(spark, lex, probes) == topk(spark, fresh, probes)
     print(f"deleted {out['deleted']} docs; "
           f"top-k == fresh build without them: {same}")
@@ -99,9 +106,9 @@ def main() -> None:
     # default fragmentation threshold)
     before = topk(spark, lex, probes)
     L.compact_lex_index(spark, lex, max_files_per_bucket=0)
-    left = (spark.read.parquet(postings)
+    left = (L.load_lex_index(spark, lex).postings
             .join(victims, "doc_id", "left_semi").count())
-    print("after compaction: masked rows on disk =", left,
+    print("after compaction: masked rows live =", left,
           "| probe unchanged:", topk(spark, lex, probes) == before)
 
     # 4. adaptive warm authority refresh over the edge store

@@ -127,8 +127,7 @@ def test_lost_race_rerun_equals_serial_order(spark, docs, tmp_path, monkeypatch)
     before B's commit. B must lose the race, re-run its merge against
     v2, and land as v3 — final content equal to running A then B
     serially. In-place dynamic partition overwrite silently drops A's
-    update in this interleaving; upsert_corpus_versioned can only
-    abort."""
+    update in this interleaving."""
     langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
     la, lb = sorted(langs)[:2]
     delta_a = (
@@ -169,6 +168,97 @@ def test_lost_race_rerun_equals_serial_order(spark, docs, tmp_path, monkeypatch)
     assert _rows(C.load_corpus_snapshot(spark, race_root)) == _rows(
         C.load_corpus_snapshot(spark, serial_root)
     )
+
+
+def _mk(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, lang string, text string")
+
+
+def test_interleaved_writers_same_partition_lose_no_update(
+    spark, tmp_path, monkeypatch
+):
+    """The lost-update interleave on ONE partition: two writer threads
+    both merge against the same snapshot (held at a barrier before
+    their first commit), then race for the same version. The loser
+    must re-run its merge against the winner's commit — both deltas
+    survive, in two consecutive versions. Plain upsert_corpus would
+    keep only the last writer's rows."""
+    import threading
+
+    root = str(tmp_path / "race")
+    C.build_corpus_snapshot(
+        _mk(spark, [(1, "en", "base")]), root, key="doc_id",
+        partition_by=["lang"],
+    )
+    real = M.commit_manifest
+    barrier = threading.Barrier(2, timeout=60)
+    waited = set()
+
+    def stalled(path, **kw):
+        me = threading.get_ident()
+        if me not in waited:
+            waited.add(me)
+            barrier.wait()  # both writers hold their stale snapshot
+        return real(path, **kw)
+
+    monkeypatch.setattr(M, "commit_manifest", stalled)
+    results, errors = {}, {}
+
+    def writer(tag, rows):
+        try:
+            results[tag] = C.upsert_corpus_snapshot(
+                spark, root, _mk(spark, rows)
+            )
+        except Exception as e:  # pragma: no cover - surfaced below
+            errors[tag] = e
+
+    ta = threading.Thread(target=writer, args=("a", [(2, "en", "from_a")]))
+    tb = threading.Thread(target=writer, args=("b", [(3, "en", "from_b")]))
+    ta.start(); tb.start(); ta.join(120); tb.join(120)
+    assert not errors, errors
+
+    got = sorted(
+        (r.doc_id, r.text)
+        for r in C.load_corpus_snapshot(spark, root).collect()
+    )
+    assert got == [(1, "base"), (2, "from_a"), (3, "from_b")]
+    assert sorted(r["version"] for r in results.values()) == [2, 3]
+
+
+def test_crashed_upsert_leaves_invisible_orphan(spark, tmp_path, monkeypatch):
+    """A writer that dies after writing its generation but before the
+    commit leaves the store serving the previous version bit-exactly;
+    the orphan generation is invisible to readers and reclaimed by the
+    vacuum, and the retried upsert lands as the next version."""
+    root = str(tmp_path / "crash")
+    C.build_corpus_snapshot(
+        _mk(spark, [(1, "en", "a"), (2, "de", "b")]), root,
+        key="doc_id", partition_by=["lang"],
+    )
+    before = _rows(C.load_corpus_snapshot(spark, root))
+    gens_before = set(os.listdir(os.path.join(root, "data")))
+
+    def crash(path, **kw):
+        raise OSError("writer died before its commit")
+
+    monkeypatch.setattr(M, "commit_manifest", crash)
+    with pytest.raises(OSError, match="before its commit"):
+        C.upsert_corpus_snapshot(spark, root, _mk(spark, [(3, "en", "c")]))
+    monkeypatch.undo()
+
+    orphans = set(os.listdir(os.path.join(root, "data"))) - gens_before
+    assert orphans  # the dead writer's generation is on disk ...
+    assert M.read_manifest(root)["version"] == 1
+    assert _rows(C.load_corpus_snapshot(spark, root)) == before  # ... unseen
+    removed = C.vacuum_corpus_snapshot(root, min_age_seconds=0)
+    assert {os.path.basename(g) for g in removed["removed_gens"]} >= orphans
+    assert not orphans & set(os.listdir(os.path.join(root, "data")))
+
+    out = C.upsert_corpus_snapshot(spark, root, _mk(spark, [(3, "en", "c")]))
+    assert out["version"] == 2
+    assert {r.doc_id for r in C.load_corpus_snapshot(spark, root).collect()} == {
+        1, 2, 3,
+    }
 
 
 def test_nested_partitioning_and_escaped_values(spark, tmp_path):

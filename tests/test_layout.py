@@ -195,126 +195,11 @@ def test_upsert_corpus_empty_delta_is_noop(spark, corpus, tmp_path):
     assert {f: os.path.getmtime(f) for f in _parquet_files(root)} == before
 
 
-# ------------------------------------------- optimistic concurrency
-def _mk(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, lang string, text string")
-
-
-def test_upsert_versioned_sequential_versions(spark, tmp_path):
-    root = str(tmp_path / "vc")
-    r1 = L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(1, "en", "a"), (2, "de", "b")]),
-        key="doc_id", partition_by=["lang"],
-    )
-    assert r1["version"] == 1
-    r2 = L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(3, "en", "c")]),
-        key="doc_id", partition_by=["lang"],
-    )
-    assert r2["version"] == 2 and r2["partitions"] == 1
-    got = sorted(
-        (r.doc_id, r.lang, r.text)
-        for r in spark.read.parquet(root).collect()
-    )
-    assert got == [(1, "en", "a"), (2, "de", "b"), (3, "en", "c")]
-    # empty delta commits nothing, version unchanged
-    r3 = L.upsert_corpus_versioned(
-        spark, root, _mk(spark, []).where(F.lit(False)),
-        key="doc_id", partition_by=["lang"],
-    )
-    assert r3 == {"partitions": 0, "rows_written": 0, "version": 2}
-
-
-def test_upsert_versioned_interleaved_writers_lose_no_update(
-    spark, tmp_path, monkeypatch
-):
-    """The lost-update interleave: both writers MERGE against the same
-    snapshot (forced by a barrier), then race to commit the same
-    partition. The loser must detect the conflict (version token taken),
-    re-merge against the winner's output, and retry — both deltas
-    survive. Plain upsert_corpus would keep only the last writer's."""
-    import threading
-
-    root = str(tmp_path / "race")
-    L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(1, "en", "base")]),
-        key="doc_id", partition_by=["lang"],
-    )
-
-    real = L._merge_touched
-    barrier = threading.Barrier(2, timeout=30)
-    first_round = {"a": True, "b": True}
-
-    def stalled(s, path, delta, key, partition_by):
-        out = real(s, path, delta, key, partition_by)
-        tag = delta._race_tag
-        if first_round[tag]:
-            first_round[tag] = False
-            barrier.wait()  # both writers hold their stale snapshot
-        return out
-
-    monkeypatch.setattr(L, "_merge_touched", stalled)
-
-    results, errors = {}, {}
-
-    def writer(tag, rows):
-        try:
-            delta = _mk(spark, rows)
-            delta._race_tag = tag
-            results[tag] = L.upsert_corpus_versioned(
-                spark, root, delta, key="doc_id", partition_by=["lang"],
-                writer_id=tag, conflict_wait_s=30.0,
-            )
-        except Exception as e:  # pragma: no cover - surfaced below
-            errors[tag] = e
-
-    ta = threading.Thread(target=writer, args=("a", [(2, "en", "from_a")]))
-    tb = threading.Thread(target=writer, args=("b", [(3, "en", "from_b")]))
-    ta.start(); tb.start(); ta.join(60); tb.join(60)
-    assert not errors, errors
-
-    got = sorted(
-        (r.doc_id, r.text) for r in spark.read.parquet(root).collect()
-    )
-    # no lost update: base + both writers' rows all present
-    assert got == [(1, "base"), (2, "from_a"), (3, "from_b")]
-    assert sorted(r["version"] for r in results.values()) == [2, 3]
-
-
-def test_upsert_versioned_stuck_pending_commit_fails_loudly(spark, tmp_path):
-    import json
-    import os
-
-    root = str(tmp_path / "stuck")
-    L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(1, "en", "a")]),
-        key="doc_id", partition_by=["lang"],
-    )
-    # simulate a writer that died after acquiring v2
-    with open(os.path.join(root, "_commits", "v2.json"), "w") as f:
-        json.dump({"version": 2, "writer": "dead", "state": "pending",
-                   "partitions": [["en"]]}, f)
-    with pytest.raises(L.CommitConflictError, match="pending"):
-        L.upsert_corpus_versioned(
-            spark, root, _mk(spark, [(2, "en", "b")]),
-            key="doc_id", partition_by=["lang"], conflict_wait_s=0.5,
-        )
-
-
-def test_upsert_versioned_rejects_object_store_paths(spark):
-    with pytest.raises(ValueError, match="Delta/Iceberg"):
-        L.upsert_corpus_versioned(
-            spark, "s3a://bucket/corpus",
-            _mk(spark, [(1, "en", "a")]),
-            key="doc_id", partition_by=["lang"],
-        )
-
-
 # ---------------------------------------------------------- CommitStore
-# The protocol tests below run against BOTH backends: the POSIX
-# O_CREAT|O_EXCL impl and the in-memory conditional-put impl (the
-# object-store stand-in) — proving upsert_corpus_versioned needs only
-# the CommitStore primitive, not POSIX semantics.
+# The primitive tests below run against every backend: the POSIX
+# O_CREAT|O_EXCL impl, the in-memory conditional-put impl (the
+# object-store stand-in) and the S3 one — the manifest commit log
+# (operators/manifestfs.py) needs only these primitives.
 
 
 def _s3_store():
@@ -363,71 +248,3 @@ def test_commit_store_replace_and_remove(commit_store):
     assert commit_store.list_records()["v1.json"]["state"] == "committed"
     commit_store.remove("v1.json")
     assert "v1.json" not in commit_store.list_records()
-
-
-def test_upsert_versioned_runs_on_memory_store(spark, tmp_path):
-    """Full protocol through the conditional-put backend: the data files
-    still land under the corpus path, the versions still linearize."""
-    root = str(tmp_path / "memstore")
-    store = L.MemoryCommitStore()
-    r1 = L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(1, "en", "a"), (2, "de", "b")]),
-        key="doc_id", partition_by=["lang"], store=store,
-    )
-    r2 = L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(1, "en", "A2")]),
-        key="doc_id", partition_by=["lang"], store=store,
-    )
-    assert (r1["version"], r2["version"]) == (1, 2)
-    loaded = {
-        r.doc_id: r.text
-        for r in spark.read.parquet(root).select("doc_id", "text").collect()
-    }
-    assert loaded == {1: "A2", 2: "b"}
-    states = [c["state"] for c in L._read_commits(store)]
-    assert states == ["committed", "committed"]
-    assert not os.path.isdir(os.path.join(root, "_commits"))
-
-
-def test_upsert_versioned_failed_overwrite_leaves_failed_token(
-    spark, tmp_path, monkeypatch
-):
-    """A mid-overwrite death must NOT show a clean history: the token
-    flips to state=failed keeping the touched-partition list,
-    failed_commits() surfaces the torn partitions, later writers are
-    not blocked, and a committed upsert covering those partitions
-    clears the repair report."""
-    root = str(tmp_path / "torn")
-    L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(1, "en", "a"), (2, "de", "b")]),
-        key="doc_id", partition_by=["lang"],
-    )
-
-    real = L._overwrite_touched
-
-    def boom(*a, **k):
-        raise RuntimeError("executor lost mid-overwrite")
-
-    monkeypatch.setattr(L, "_overwrite_touched", boom)
-    with pytest.raises(RuntimeError, match="mid-overwrite"):
-        L.upsert_corpus_versioned(
-            spark, root, _mk(spark, [(3, "en", "c")]),
-            key="doc_id", partition_by=["lang"],
-        )
-    failed = L.failed_commits(root)
-    assert len(failed) == 1
-    assert failed[0]["version"] == 2
-    assert failed[0]["unrepaired"] == [("en",)]
-
-    # later writers see the failed token as terminal, not pending —
-    # version numbering continues past it
-    monkeypatch.setattr(L, "_overwrite_touched", real)
-    r3 = L.upsert_corpus_versioned(
-        spark, root, _mk(spark, [(3, "en", "c")]),
-        key="doc_id", partition_by=["lang"], conflict_wait_s=2.0,
-    )
-    assert r3["version"] == 3
-    # the committed v3 touched the torn partition: repaired
-    assert L.failed_commits(root) == []
-    loaded = {r.doc_id for r in spark.read.parquet(root).collect()}
-    assert loaded == {1, 2, 3}

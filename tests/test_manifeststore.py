@@ -1,5 +1,6 @@
-"""Manifest-committed store layout (operators/manifestfs.py): the
-object-store-safe seam. What these tests pin, per the design contract:
+"""Manifest-committed store layout (operators/manifestfs.py): the one
+durability protocol of the persisted stores. What these tests pin, per
+the design contract:
 
 - ZERO python-side renames anywhere in the manifest maintenance path
   (commit is an O_CREAT|O_EXCL create; data dirs are immutable);
@@ -12,8 +13,8 @@ object-store-safe seam. What these tests pin, per the design contract:
   a pinned reader serves;
 - a whole-store rebuild is observed fully-old or fully-new, never
   mixed (the one-commit cutover);
-- semantics parity with the rename layout: delete is bit-equal to a
-  fresh build, delete+append == union build, compaction purges.
+- semantics: delete is bit-equal to a fresh build, delete+append ==
+  union build, compaction purges.
 """
 
 import os
@@ -323,7 +324,7 @@ def test_append_survives_losing_version_race(
     out = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 3 == 0)
     b = docs.where(F.col("doc_id") % 3 == 1)
-    L.build_lex_index(a, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(a, out, n_buckets=4)
 
     real = M.commit_manifest
     state = {"stolen": False}
@@ -358,7 +359,7 @@ def test_append_refuses_merge_across_concurrent_rebuild(
     out = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 3 == 0)
     b = docs.where(F.col("doc_id") % 3 == 1)
-    L.build_lex_index(a, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(a, out, n_buckets=4)
 
     real = M.commit_manifest
     state = {"stolen": False}
@@ -405,7 +406,7 @@ def test_manifest_lifecycle_performs_zero_python_renames(
 
     out = str(tmp_path / "lex")
     half = docs.limit(60)
-    L.build_lex_index(half, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(half, out, n_buckets=4)
     L.append_lex_index(docs.limit(80).subtract(half), out)
     L.delete_from_lex_index(
         spark, out, half.select("doc_id").limit(10)
@@ -432,7 +433,7 @@ def test_full_lifecycle_on_memory_commit_log(spark, docs, probes, tmp_path):
     try:
         a = docs.where(F.col("doc_id") % 2 == 0)
         b = docs.where(F.col("doc_id") % 2 == 1)
-        L.build_lex_index(a, out, n_buckets=4, layout="manifest")
+        L.build_lex_index(a, out, n_buckets=4)
         L.append_lex_index(b, out)
         L.delete_from_lex_index(
             spark, out, a.select("doc_id").limit(20)
@@ -442,7 +443,7 @@ def test_full_lifecycle_on_memory_commit_log(spark, docs, probes, tmp_path):
 
         # head == the same lifecycle on a posix-log store, bit-exact
         ref = str(tmp_path / "ref")
-        L.build_lex_index(a, ref, n_buckets=4, layout="manifest")
+        L.build_lex_index(a, ref, n_buckets=4)
         L.append_lex_index(b, ref)
         L.delete_from_lex_index(
             spark, ref, a.select("doc_id").limit(20)
@@ -489,7 +490,7 @@ def test_append_crash_is_invisible_then_retries_exactly_once(
     out = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 2 == 0)
     b = docs.where(F.col("doc_id") % 2 == 1)
-    L.build_lex_index(a, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(a, out, n_buckets=4)
     want_old = _lex_topk(spark, out, probes)
     v0 = M.read_manifest(out)["version"]
 
@@ -524,10 +525,10 @@ def test_delete_crash_is_fully_atomic_then_retries_fully(
 ):
     """Manifest delete = negative df deltas + tombstones + meta in ONE
     commit: a crash leaves NOTHING visible (no partial artifacts at
-    all — the rename layout can only order the windows), and the retry
+    all), and the retry
     deletes cleanly to fresh-build bit-equality."""
     out = str(tmp_path / "lex")
-    L.build_lex_index(docs, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(docs, out, n_buckets=4)
     victims = docs.where(F.col("doc_id") % 3 == 0).select("doc_id")
     want_old = _lex_topk(spark, out, probes)
     meta0 = M.read_manifest(out)["meta"]
@@ -544,8 +545,8 @@ def test_delete_crash_is_fully_atomic_then_retries_fully(
     assert idx.meta == meta0
     assert _lex_topk(spark, out, probes) == want_old
 
-    # retry deletes FULLY (not a no-op — contrast the rename layout's
-    # tombstone-first ordering) and is bit-equal to a fresh build
+    # retry deletes FULLY (not a no-op) and is bit-equal to a fresh
+    # build
     out2 = L.delete_from_lex_index(spark, out, victims)
     assert out2["deleted"] == victims.count()
     fresh = str(tmp_path / "fresh")
@@ -560,7 +561,7 @@ def test_compact_and_rebuild_crash_keep_old_store_serving(
 ):
     out = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 2 == 0)
-    L.build_lex_index(a, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(a, out, n_buckets=4)
     L.append_lex_index(docs.where(F.col("doc_id") % 2 == 1), out)
     want = _lex_topk(spark, out, probes)
     v0 = M.read_manifest(out)["version"]
@@ -590,15 +591,14 @@ def test_compact_and_rebuild_crash_keep_old_store_serving(
 def test_ann_delete_crash_atomic_no_stat_drift(
     spark, sf_dir, tmp_path, monkeypatch
 ):
-    """The ANN n_rows drift (rename layout: tombstones land, meta
-    doesn't, retry can't recover) is impossible here: tombstones and
-    meta are one commit."""
+    """No ANN n_rows drift (tombstones landing without the meta
+    decrement, which a retry could not recover): tombstones and meta
+    are one commit."""
     vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding", "label"
     )
     out = str(tmp_path / "ann")
-    meta0 = A.build_ann_index(vecs, out, m=4, n_codewords=8,
-                              layout="manifest")
+    meta0 = A.build_ann_index(vecs, out, m=4, n_codewords=8)
     victims = [r.vec_id for r in vecs.where(F.col("vec_id") % 9 == 0)
                .select("vec_id").collect()]
 
@@ -626,7 +626,7 @@ def test_reader_pins_its_generation_across_maintenance(
     out = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 2 == 0)
     b = docs.where(F.col("doc_id") % 2 == 1)
-    L.build_lex_index(a, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(a, out, n_buckets=4)
     pinned = L.load_lex_index(spark, out)
     want_pinned = _handle_topk(pinned, probes)
 
@@ -652,7 +652,7 @@ def test_ann_reader_pins_across_rebuild(spark, sf_dir, tmp_path):
     queries = vecs.orderBy("vec_id").limit(5)
     out = str(tmp_path / "ann")
     A.build_ann_index(vecs.where(F.col("vec_id") % 2 == 0), out,
-                      m=4, n_codewords=8, layout="manifest")
+                      m=4, n_codewords=8)
     pinned = A.load_ann_index(spark, out)
 
     def topk(idx):
@@ -665,14 +665,12 @@ def test_ann_reader_pins_across_rebuild(spark, sf_dir, tmp_path):
     A.rebuild_ann_index(vecs, out, m=4, n_codewords=8)
     assert topk(pinned) == want
     fresh = str(tmp_path / "fresh")
-    A.build_ann_index(vecs, fresh, m=4, n_codewords=8, layout="rename")
+    A.build_ann_index(vecs, fresh, m=4, n_codewords=8)
     assert topk(A.load_ann_index(spark, out)) == topk(
         A.load_ann_index(spark, fresh)
     )
     # explicit time travel: version 1 == the pinned pre-rebuild handle
     assert topk(A.load_ann_index(spark, out, version=1)) == want
-    with pytest.raises(ValueError, match="manifest-layout"):
-        A.load_ann_index(spark, fresh, version=1)
 
 
 # ------------------------------------------------------- time travel
@@ -686,7 +684,7 @@ def test_time_travel_serves_historical_snapshots_bit_exactly(
     out = str(tmp_path / "lex")
     a = docs.where(F.col("doc_id") % 2 == 0)
     b = docs.where(F.col("doc_id") % 2 == 1)
-    L.build_lex_index(a, out, n_buckets=4, layout="manifest")  # v1
+    L.build_lex_index(a, out, n_buckets=4)  # v1
     v1_want = _lex_topk(spark, out, probes)
     L.append_lex_index(b, out)                                 # v2
     v2_want = _lex_topk(spark, out, probes)
@@ -698,11 +696,9 @@ def test_time_travel_serves_historical_snapshots_bit_exactly(
     assert _handle_topk(
         L.load_lex_index(spark, out, version=2), probes
     ) == v2_want
-    # v3 head == fresh build without the deleted docs (delete parity);
-    # rename layout on purpose — it doubles as the no-history negative
-    # case below
+    # v3 head == fresh build without the deleted docs (delete parity)
     fresh = str(tmp_path / "fresh")
-    L.build_lex_index(b, fresh, n_buckets=4, layout="rename")
+    L.build_lex_index(b, fresh, n_buckets=4)
     assert _lex_topk(spark, out, probes) == _lex_topk(spark, fresh, probes)
 
     # vacuumed history raises with the retention hint; retained works
@@ -710,10 +706,6 @@ def test_time_travel_serves_historical_snapshots_bit_exactly(
     with pytest.raises(FileNotFoundError, match="vacuum"):
         L.load_lex_index(spark, out, version=1)
     assert _lex_topk(spark, out, probes) == _lex_topk(spark, fresh, probes)
-
-    # rename-layout stores have no history
-    with pytest.raises(ValueError, match="manifest-layout"):
-        L.load_lex_index(spark, fresh, version=1)
 
 
 def test_time_travel_edge_store_pre_takedown(spark, tmp_path):
@@ -756,8 +748,7 @@ def test_manifest_delete_then_append_equals_union_build(
     b = docs.where(F.col("doc_id") % 3 == 1)
     c = docs.where(F.col("doc_id") % 3 == 2)
     out = str(tmp_path / "lex")
-    L.build_lex_index(a.unionByName(b), out, n_buckets=8,
-                      layout="manifest")
+    L.build_lex_index(a.unionByName(b), out, n_buckets=8)
     L.delete_from_lex_index(spark, out, b.select("doc_id"))
     L.append_lex_index(c, out)
     ref = str(tmp_path / "ref")
@@ -770,7 +761,7 @@ def test_manifest_compaction_purges_and_drops_emptied_buckets(
 ):
     out = str(tmp_path / "lex")
     sub = docs.limit(40)
-    L.build_lex_index(sub, out, n_buckets=2, layout="manifest")
+    L.build_lex_index(sub, out, n_buckets=2)
     L.delete_from_lex_index(spark, out, sub.select("doc_id"))
     L.compact_lex_index(spark, out, max_files_per_bucket=0)
     snap = M.read_manifest(out)
@@ -794,7 +785,7 @@ def test_streaming_append_two_batches_restart_no_double_append(
     b2 = docs.where((F.col("doc_id") >= 160) & (F.col("doc_id") < 220))
 
     out = str(tmp_path / "lex_stream")
-    L.build_lex_index(base, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(base, out, n_buckets=4)
     landing = str(tmp_path / "landing")
     ckpt = str(tmp_path / "ckpt")
 
@@ -844,7 +835,7 @@ def test_streaming_ann_append_restart_no_double_append(
     b1 = vecs.where(F.col("vec_id") % 3 == 1)
     b2 = vecs.where(F.col("vec_id") % 3 == 2)
     out = str(tmp_path / "ann_stream")
-    A.build_ann_index(base, out, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(base, out, m=4, n_codewords=8)
     landing = str(tmp_path / "landing")
     ckpt = str(tmp_path / "ckpt")
 
@@ -895,7 +886,7 @@ def test_manifest_probe_scan_still_partition_prunes(
     the bucket=N partitions the query terms hash into (bucket stays a
     partition column under basePath=<table>, gen=N rides above it)."""
     out = str(tmp_path / "lex_pp")
-    L.build_lex_index(docs, out, n_buckets=16, layout="manifest")
+    L.build_lex_index(docs, out, n_buckets=16)
     idx = L.load_lex_index(spark, out)
     plan = (
         L.lex_index_topk(idx, probes, k=3)
@@ -918,7 +909,7 @@ def test_manifest_ann_coded_scan_still_partition_prunes(
         "vec_id", "embedding", "label"
     )
     out = str(tmp_path / "ann_pp")
-    A.build_ann_index(vecs, out, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(vecs, out, m=4, n_codewords=8)
     idx = A.load_ann_index(spark, out)
     one_cell = idx.coded.where(F.col("cell") == 0)
     plan = one_cell._jdf.queryExecution().executedPlan().toString()
@@ -965,6 +956,11 @@ def test_edge_store_manifest_takedown_and_compaction(spark, tmp_path):
     got = {(r.src_domain, r.dst_domain, r.n_links)
            for r in G.load_edges(spark, root).collect()}
     assert got == want
+    # the rewrite purged the masked edges physically
+    raw = M.read_table(spark, root, "edges", M.read_manifest(root))
+    assert raw.where(
+        (F.col("src_domain") == "spam.biz") | (F.col("dst_domain") == "spam.biz")
+    ).count() == 0
     v = G.vacuum_edge_store(root, keep_manifests=1, min_age_seconds=0)
     assert v["removed_gens"]
     assert {(r.src_domain, r.dst_domain, r.n_links)
@@ -985,7 +981,7 @@ def test_delete_on_emptied_manifest_ann_index(spark, sf_dir, tmp_path):
         "vec_id", "embedding", "label"
     ).where(F.col("vec_id") < 64)
     out = str(tmp_path / "ann")
-    A.build_ann_index(vecs, out, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(vecs, out, m=4, n_codewords=8)
     all_ids = vecs.select("vec_id")
     assert A.delete_from_ann_index(spark, out, all_ids)["deleted"] == 64
     A.compact_ann_index(spark, out, max_files_per_cell=0)
@@ -1010,30 +1006,24 @@ def test_delete_on_emptied_manifest_ann_index(spark, sf_dir, tmp_path):
     assert hits.count() > 0
 
 
-def test_rebuild_accepts_explicit_layout_kwarg(spark, sf_dir, tmp_path, docs):
-    """rebuild_*(..., layout="manifest") on a manifest store must not
-    collide with the layout the rebuild sets itself; changing layout in
-    place is rejected loudly, and lex rejects unknown kwargs instead of
-    silently dropping them."""
+def test_rebuild_rejects_unknown_kwargs(spark, sf_dir, tmp_path, docs):
+    """rebuild_* takes the build parameters and rejects unknown kwargs
+    instead of silently dropping them."""
     vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding", "label"
     ).where(F.col("vec_id") < 200)
     aout = str(tmp_path / "ann")
-    A.build_ann_index(vecs, aout, m=4, n_codewords=8, layout="manifest")
-    meta = A.rebuild_ann_index(
-        vecs, aout, m=4, n_codewords=8, layout="manifest"
-    )
+    A.build_ann_index(vecs, aout, m=4, n_codewords=8)
+    meta = A.rebuild_ann_index(vecs, aout, m=4, n_codewords=8)
     assert meta["n_rows"] == vecs.count()
-    with pytest.raises(ValueError, match="cannot change"):
-        A.rebuild_ann_index(vecs, aout, layout="rename")
+    with pytest.raises(TypeError, match="unexpected"):
+        A.rebuild_ann_index(vecs, aout, bogus=1)
 
     lout = str(tmp_path / "lex")
     half = docs.limit(40)
-    L.build_lex_index(half, lout, n_buckets=4, layout="manifest")
-    m2 = L.rebuild_lex_index(half, lout, n_buckets=2, layout="manifest")
+    L.build_lex_index(half, lout, n_buckets=4)
+    m2 = L.rebuild_lex_index(half, lout, n_buckets=2)
     assert m2["n_buckets"] == 2
-    with pytest.raises(ValueError, match="cannot change"):
-        L.rebuild_lex_index(half, lout, layout="rename")
     with pytest.raises(TypeError, match="unexpected"):
         L.rebuild_lex_index(half, lout, bogus=1)
 
@@ -1058,14 +1048,14 @@ def test_lex_delete_racing_append_equals_serial_order(
 
     # serial reference: append fully lands, then the delete
     ref = str(tmp_path / "ref")
-    L.build_lex_index(base, ref, n_buckets=4, layout="manifest")
+    L.build_lex_index(base, ref, n_buckets=4)
     L.append_lex_index(delta, ref)
     res_ref = L.delete_from_lex_index(spark, ref, del_ids)
 
     # interleaved: the append commits BETWEEN the delete's snapshot
     # read and its commit
     out = str(tmp_path / "out")
-    L.build_lex_index(base, out, n_buckets=4, layout="manifest")
+    L.build_lex_index(base, out, n_buckets=4)
     orig_commit = M.commit_manifest
     state = {"fired": False}
 
@@ -1117,12 +1107,12 @@ def test_ann_delete_racing_append_equals_serial_order(
     del_ids = [0, 1, 2, 120, 121]  # 3 in base, 2 only in the delta
 
     ref = str(tmp_path / "ref")
-    A.build_ann_index(base, ref, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(base, ref, m=4, n_codewords=8)
     A.append_ann_index(delta, ref)
     res_ref = A.delete_from_ann_index(spark, ref, del_ids)
 
     out = str(tmp_path / "out")
-    A.build_ann_index(base, out, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(base, out, m=4, n_codewords=8)
     orig_commit = M.commit_manifest
     state = {"fired": False}
 
@@ -1224,9 +1214,8 @@ def test_edge_sink_auto_compaction_fires_once_at_threshold(
 def test_ann_manifest_sink_compact_over_bounds_fragmentation(
     spark, sf_dir, tmp_path
 ):
-    """The ANN sink's compact_over policy must hold on the MANIFEST
-    layout too (the threshold reads live part counts from the
-    manifest, not a disk listing): repeated micro-batch appends into
+    """The ANN sink's compact_over policy must hold (the threshold
+    reads live part counts from the manifest, not a disk listing): repeated micro-batch appends into
     the same cells stay bounded, and probes serve bit-equal to plain
     batch appends."""
     vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -1234,7 +1223,7 @@ def test_ann_manifest_sink_compact_over_bounds_fragmentation(
     )
     base = vecs.where(F.col("vec_id") < 80)
     out = str(tmp_path / "ann")
-    A.build_ann_index(base, out, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(base, out, m=4, n_codewords=8)
     sink = A.ann_index_sink(out, compact_over=2)
     batches = [
         vecs.where((F.col("vec_id") >= 80 + 20 * b)
@@ -1248,7 +1237,7 @@ def test_ann_manifest_sink_compact_over_bounds_fragmentation(
     assert counts and all(c <= 2 for c in counts.values()), counts
 
     ref = str(tmp_path / "ref")
-    A.build_ann_index(base, ref, m=4, n_codewords=8, layout="manifest")
+    A.build_ann_index(base, ref, m=4, n_codewords=8)
     for df in batches:
         A.append_ann_index(df, ref)
     queries = vecs.orderBy("vec_id").limit(5)

@@ -69,6 +69,21 @@ def test_clustering_scores_perfect_and_degenerate(spark, people):
     assert s2["adjusted_rand"] == 0.0
 
 
+def test_clustering_scores_degenerate_exact_on_many_partitions(spark, people):
+    """One cluster over many input partitions: H(C|K) and H(C) are sums
+    of the same per-cell terms, so homogeneity must be exactly 0 on
+    every run, whatever order the partial sums merge in."""
+    from pyspark.sql import functions as F
+
+    from auto_data_linkage_spark.metrics import clustering_scores
+
+    allone = people.withColumn("cluster_id", F.lit(""))
+    for n_parts in (3, 5, 7, 11, 13):
+        s = clustering_scores(allone.repartition(n_parts), "recid")
+        assert s["homogeneity"] == 0.0
+        assert s["adjusted_rand"] == 0.0
+
+
 def test_clustering_scores_match_sklearn_if_available(spark, people):
     try:
         from sklearn.metrics import (
